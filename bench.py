@@ -265,7 +265,7 @@ COST = {
 #: Catalyst, and the bench measures a fraction of the query (found
 #: round 9 on bigram_lm_fluency: benched 0.25 s, real cost ~4 s; found
 #: round 11 to also affect gopher_repetition_signals — benched 0.48 s
-#: in r9 vs honest 7.1 s — plus 9 more, see tools/r11_elimination_scan.py).
+#: in r9 vs honest 7.1 s — plus 9 more).
 #: Detection is now AUTOMATIC at bench time: during warmup we compile
 #: both the count() plan and the full plan and switch to a full-width
 #: xxhash64 checksum action whenever the count() plan dropped

@@ -140,38 +140,28 @@ def streaming_view_sink(
     batches — hits the watermark check and no-ops, so the view never
     double-counts (asserted in tests, including restart). Each commit
     is a full small-table rewrite of the VIEW (groups-sized, not
-    stream-sized) published by pointer flip; the base table itself is
+    stream-sized) published as one versioned commit; the base table itself is
     not touched, making this the derived-view half of the lakehouse
     story: raw appends via stream_sink, maintained aggregates via this.
     """
     from real_estate_project1_etl_spark.sinks import versioned as V
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_id = int(batch_id)
-        base_version = V.current_version(view_path)
-        txn = V._head_txn(view_path, base_version)
-        if app_id in txn and batch_id <= txn[app_id]:
-            return
         delta = build_count_sum_agg(batch_df, group_col, value_col)
-        if base_version:
-            base = V.read_snapshot(batch_df.sparkSession, view_path, base_version)
-            merged = (
-                base.unionByName(delta)
+
+        def merged(base: int) -> DataFrame:
+            if not base:
+                return delta
+            return (
+                V.read_snapshot(batch_df.sparkSession, view_path, base)
+                .unionByName(delta)
                 .groupBy("grp")
                 .agg(F.sum("n_rows").alias("n_rows"), F.sum("total").alias("total"))
             )
-        else:
-            import os as _os
 
-            _os.makedirs(view_path, exist_ok=True)
-            merged = delta
-        files = V._write_data_files(merged.coalesce(1), view_path, None)
-        V._commit(
-            view_path,
-            base_version,
-            files,
-            f"view_refresh[{batch_id}]",
-            {**txn, app_id: batch_id},
+        V.commit_replace(
+            view_path, merged, f"view_refresh[{batch_id}]",
+            txn=(app_id, int(batch_id)), n_files=1,
         )
 
     return write

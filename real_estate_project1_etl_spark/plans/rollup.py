@@ -15,6 +15,13 @@ derivable from a rollup; the router refuses them so callers fall back to
 the base table — silently serving a wrong answer is the classic summary-
 table bug this module's contract exists to prevent.
 
+The summary is a versioned table (:mod:`..sinks.versioned`): every fold
+is one commit through the same manifest publish and per-writer txn
+watermark as the ingest table, so folds are exactly-once under replay and
+concurrent folders all land by optimistic retry.  ``_rollup_meta.json``
+beside it holds only the grain and specs, which never change after
+materialization.
+
 Extends the reference's single-grain pandas report (reference:
 transform.py:30-58 computes per-listing metrics only) with the
 serve-at-any-grain layer.
@@ -27,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sinks import versioned as V
 
 #: aggregate functions a rollup can materialize and re-aggregate
 _ALGEBRAIC = ("sum", "count", "min", "max")
@@ -52,16 +61,20 @@ def materialize_rollup(
     for out, (fn, _src) in specs.items():
         if fn not in _ALGEBRAIC:
             raise ValueError(f"{fn} is not algebraic; cannot materialize {out}")
-    df.groupBy(*group_cols).agg(*_partial_aggs(specs)).write.mode(
-        "overwrite"
-    ).parquet(path)
+    os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, _META), "w") as fh:
         json.dump({"group_cols": list(group_cols), "specs": dict(specs)}, fh)
+    V.create_or_replace(
+        df.groupBy(*group_cols).agg(*_partial_aggs(specs)), path, n_files=1
+    )
 
 
 def rollup_meta(path: str) -> dict:
+    """Grain and specs from the sidecar, plus the head commit's per-app
+    txn watermarks under ``"txn"``."""
     with open(os.path.join(path, _META)) as fh:
-        return json.load(fh)
+        meta = json.load(fh)
+    return {**meta, "txn": V._head_txn(path, V.current_version(path))}
 
 
 def can_serve(meta: dict, group_cols: list[str], aggs: dict[str, tuple[str, str]]) -> bool:
@@ -111,7 +124,7 @@ def query_rollup(
             f"group by {group_cols} with {aggs}"
         )
     specs = meta["specs"]
-    r = spark.read.parquet(path)
+    r = V.read_snapshot(spark, path)
     out_aggs = []
     for out, (fn, src) in aggs.items():
         if fn == "sum":
@@ -152,110 +165,42 @@ def update_rollup(
     batch_df: DataFrame,
     path: str,
     txn: tuple[str, int] | None = None,
-    wait_timeout_s: float = 900.0,
 ) -> None:
     """Fold a NEW batch of base-table rows into an existing rollup without
     touching the base table — the maintenance loop that keeps summary
     tables fresh under continuous ingest.  Work is O(batch + |rollup|):
     the batch aggregates to partials at the rollup's grain, unions with
-    the current summary, and re-aggregates by the algebraic merge rules
+    the head summary, and re-aggregates by the algebraic merge rules
     (sum/count partials add — decimal, so the fold is exact and
     order-independent; min/max fold by min/max).  Fold-in-any-order
     equals full recompute (tested).
 
+    The merged summary is committed as one file replacing the head's
+    (:func:`versioned.commit_replace`): a concurrent fold that commits
+    first makes this one re-read the new head and merge again, and
     ``txn=(app_id, batch_id)`` makes the fold EXACTLY-ONCE under
-    micro-batch replay: a batch at or below the app's recorded watermark
-    is skipped, and the watermark rides in the meta sidecar WRITTEN INTO
-    the temp dir before the swap — data and watermark publish atomically,
-    so a crash never leaves a folded batch unrecorded (the double-count
-    window of a sidecar-after-swap design).
-
-    Crash safety: the merged summary lands in a temp dir and swaps in via
-    the sinks' crash-tolerant local-FS swap (old kept until new is in
-    place; recovery on next entry).  At cluster scale the same merge
-    writes a new versioned-table commit instead.
+    micro-batch replay through the versioned watermark gate — data and
+    watermark publish in the same manifest.  Each fold then vacuums to
+    the last two versions, so the rollup's disk stays bounded while a
+    reader of the previous version keeps its file.
     """
-    import fcntl as _fcntl
-    import os as _os
-    import time as _time
-
-    # Writer mutual exclusion: the fold is read-merge-swap, so two
-    # concurrent folders (the per-app txn watermark invites multiple apps)
-    # would silently lose one fold and collide on the tmp dir.  An
-    # ``fcntl.flock`` on a PERSISTENT lock file is held for the whole fold
-    # (ADVICE round 3): the kernel releases it the instant a holder
-    # crashes, so there is no staleness window to misjudge, no mtime to
-    # refresh, and — because the file is never unlinked — no
-    # steal/double-unlink race between waiters.  Waiters poll
-    # non-blockingly up to ``wait_timeout_s`` (default 15 min >= any
-    # healthy fold; a parameter, not a constant, so long folds don't crash
-    # a streaming foreachBatch caller).  Like the plain-parquet swap sinks
-    # this is the LOCAL-FS tier; on an object store the versioned-table
-    # commit (sinks/versioned.py) provides the mutual exclusion instead.
-    lock = path.rstrip("/") + "._rollup_lock"
-    fd = _os.open(lock, _os.O_CREAT | _os.O_RDWR)
-    deadline = _time.monotonic() + float(wait_timeout_s)
-    try:
-        while True:
-            try:
-                _fcntl.flock(fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB)
-                break
-            # only lock-held (EAGAIN/EWOULDBLOCK) and interrupt retry; an
-            # unsupported-flock filesystem (ENOTSUP on some NFS/FUSE)
-            # must fail FAST, not busy-poll to a misleading timeout
-            except (BlockingIOError, InterruptedError):
-                if _time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"rollup lock busy for >{wait_timeout_s}s: {lock} — "
-                        "another folder is (still) running; raise "
-                        "wait_timeout_s if its folds legitimately take longer"
-                    )
-                _time.sleep(0.1)
-        try:
-            _update_rollup_locked(batch_df, path, txn)
-        finally:
-            _fcntl.flock(fd, _fcntl.LOCK_UN)
-    finally:
-        _os.close(fd)
-
-
-def _update_rollup_locked(
-    batch_df: DataFrame, path: str, txn: tuple[str, int] | None
-) -> None:
-    import os as _os
-
-    from ..sinks.writers import _recover_swap, _swap_dir
-
-    _recover_swap(path, "rollup")
     meta = rollup_meta(path)
-    if txn is not None:
-        app_id, batch_id = txn
-        if int(batch_id) <= meta.get("txn", {}).get(app_id, -1):
-            return  # replayed micro-batch: already folded
-        meta = {**meta, "txn": {**meta.get("txn", {}), app_id: int(batch_id)}}
     specs = meta["specs"]
     grain = meta["group_cols"]
-    spark = batch_df.sparkSession
     partial = batch_df.groupBy(*grain).agg(*_partial_aggs(specs))
-    current = spark.read.parquet(path)
     merge_aggs = [F.sum("rollup_count__").alias("rollup_count__")]
     for out, (fn, _src) in specs.items():
         if fn in ("sum", "count"):
             merge_aggs.append(F.sum(out).alias(out))
         else:
             merge_aggs.append(getattr(F, fn)(out).alias(out))
-    merged = (
-        current.unionByName(partial, allowMissingColumns=False)
-        .groupBy(*grain)
-        .agg(*merge_aggs)
-    )
-    tmp = path.rstrip("/") + "._rollup_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    # meta (incl. the advanced watermark) goes INTO tmp so the swap
-    # publishes data + watermark as one unit
-    with open(_os.path.join(tmp, _META), "w") as fh:
-        json.dump(meta, fh)
-    _swap_dir(path, tmp, "rollup")
+
+    def merged(base: int) -> DataFrame:
+        current = V.read_snapshot(batch_df.sparkSession, path, base)
+        return current.unionByName(partial).groupBy(*grain).agg(*merge_aggs)
+
+    if V.commit_replace(path, merged, "rollup_fold", txn=txn, n_files=1):
+        V.vacuum(path, keep_last=2)
 
 
 def rollup_stream_sink(path: str, app_id: str):

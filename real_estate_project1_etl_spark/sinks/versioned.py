@@ -1,38 +1,44 @@
-"""Versioned parquet tables: snapshot isolation via a manifest pointer.
+"""Versioned parquet tables: the engine's one commit protocol.
 
-The plain-parquet sinks in :mod:`writers` swap whole directories into
-place — crash-tolerant, but only on a POSIX filesystem (object stores
-have no atomic directory rename), and a reader racing the swap can see
-the table mid-flight.  This module is the scale tier: a minimal
+Every table the engine commits to — the ingest table, the rollup
+summary, maintained views, SCD1/SCD2 dimensions — is this minimal
 manifest-based table format in the spirit of Delta/Iceberg (public
 designs: Armbrust et al., "Delta Lake: High-Performance ACID Table
 Storage over Cloud Object Stores", VLDB 2020), built only on operations
 every storage backend provides atomically — write-a-new-object and
-replace-a-single-small-file.
+create-an-object-only-if-absent.
 
 Layout::
 
     table/
       data/commit-<token>/part-*.parquet   immutable data files
-      _manifests/v<N>.json                 file list for version N
-      _CURRENT                             pointer: the committed version
+      _manifests/v<N>.json                 file list + txn watermarks of version N
+      _CURRENT                             hint: a recently committed version
 
-Commit protocol (single-writer optimistic):
+Commit protocol (optimistic, any number of writers):
 
 1. Spark writes data files into a fresh ``data/commit-<token>/`` dir —
    never touches live files, so a crash leaves invisible garbage only.
-2. The manifest ``v<N+1>.json`` is created with ``open(..., 'x')`` —
-   exclusive create doubles as conflict detection: a concurrent
-   committer of the same version loses with :class:`CommitConflict`.
-3. ``_CURRENT`` is atomically replaced (``os.replace``; the object-store
-   analogue is an If-Match PUT / DynamoDB pointer as in the Delta paper).
-   Readers resolve ``_CURRENT`` once, then read an immutable file list —
-   they see the table before or after a commit, never during.
+2. The complete manifest is written to a temp file and hard-linked into
+   place as ``v<base+1>.json``.  The exclusive create IS the commit: it
+   lands whole, or fails with :class:`CommitConflict` when another writer
+   already committed on top of the same base — a writer on a stale base
+   can never drop another writer's files or watermarks.
+3. ``_CURRENT`` is replaced (``os.replace``) as a hint.  Readers start
+   from it and roll forward while ``v<N+1>.json`` exists, so a crash
+   before the hint update, or a late hint from a slow writer, costs an
+   ``exists()`` probe, never a commit.
+
+A lost race is retried on the new head: appends rebase their file list
+(:func:`append`, :func:`idempotent_append`); read-modify-write commits
+rebuild from the new head (:func:`commit_replace` — upsert, SCD2,
+compaction, Z-order, rollup folds, view refreshes).  Both re-check the
+per-writer transaction watermark on the head they commit on
+(:func:`_gate`), which makes streaming replay a no-op.
 
 Reads take the manifest's explicit file list (``spark.read.parquet(*files)``)
-— no directory listing on the read path, which at 100 TB / object-store
-latency is itself the difference between planning in milliseconds and
-minutes.  Old versions stay readable (time travel) until :func:`vacuum`.
+— no directory listing on the read path.  Old versions stay readable
+(time travel) until :func:`vacuum`.
 
 These helpers run on the DRIVER (manifest I/O is a handful of small
 files); only the parquet data files are written by executors.
@@ -43,8 +49,10 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,20 +60,25 @@ from pyspark.sql import functions as F
 __all__ = [
     "CommitConflict",
     "append",
+    "commit_replace",
     "compact",
     "create_or_replace",
     "current_version",
     "history",
     "idempotent_append",
+    "optimize_zorder",
     "read_snapshot",
+    "scd2_upsert",
     "stream_sink",
     "upsert",
     "vacuum",
+    "zorder_key_expr",
 ]
 
 
 class CommitConflict(RuntimeError):
-    """Another writer committed this version first — retry on latest."""
+    """Another writer committed on top of this commit's base — rebuild on
+    the new head and retry."""
 
 
 def _manifest_dir(path: str) -> str:
@@ -80,13 +93,30 @@ def _current_path(path: str) -> str:
     return os.path.join(path, "_CURRENT")
 
 
+def _manifest_versions(path: str) -> list[int]:
+    """Versions with a published manifest (a directory listing: vacuum and
+    the stale-hint fallback only, never the read path)."""
+    mdir = _manifest_dir(path)
+    names = os.listdir(mdir) if os.path.isdir(mdir) else []
+    return sorted(
+        int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json")
+    )
+
+
 def current_version(path: str) -> int:
-    """The committed version, or 0 if the table does not exist yet."""
+    """The committed head, or 0 if the table does not exist yet: the
+    ``_CURRENT`` hint rolled forward over manifests published after it."""
     try:
         with open(_current_path(path)) as fh:
-            return int(fh.read().strip())
+            v = int(fh.read().strip())
     except FileNotFoundError:
-        return 0
+        v = 0
+    if v and not os.path.exists(_manifest_path(path, v)):
+        # a hint so stale that vacuum expired its version
+        v = max(_manifest_versions(path), default=0)
+    while os.path.exists(_manifest_path(path, v + 1)):
+        v += 1
+    return v
 
 
 def _read_manifest(path: str, version: int) -> dict:
@@ -104,6 +134,12 @@ def _write_data_files(df: DataFrame, path: str, n_files: int | None) -> list[str
         for f in os.listdir(commit_dir)
         if f.endswith(".parquet")
     )
+
+
+def _discard(path: str, files: list[str]) -> None:
+    """Delete the commit dirs of files that no manifest will list."""
+    for d in {os.path.dirname(f) for f in files}:
+        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
 #: manifest stats are kept only for types whose min/max are JSON-exact and
@@ -285,22 +321,18 @@ def _commit(
 ) -> int:
     """Publish ``files`` as version ``base_version + 1``.
 
-    Exclusive-create of the manifest is the conflict gate; the pointer
-    replace is the atomic publish.  A crash between the two leaves a
-    manifest that ``_CURRENT`` never references — harmless (the next
-    committer of that version number conflicts and retries one higher,
-    via :func:`_next_free_version`).
+    Raises :class:`CommitConflict` when that version already exists, i.e.
+    ``base_version`` is no longer the head.  A crash before the manifest
+    is published leaves only unreferenced data files; a crash after it
+    leaves a committed version that the ``_CURRENT`` hint lags behind
+    (readers roll forward over it).
     """
-    version = _next_free_version(path, base_version + 1)
-    os.makedirs(_manifest_dir(path), exist_ok=True)
+    version = base_version + 1
+    base = _read_manifest(path, base_version) if base_version else {}
     # per-file min/max stats for manifest-level data skipping: carried
     # forward for files retained from the base version, read from the
     # parquet footers (one footer each, driver-side) for new files
-    prior_stats = (
-        _read_manifest(path, base_version).get("file_stats", {})
-        if base_version
-        else {}
-    )
+    prior_stats = base.get("file_stats", {})
     new = [f for f in files if f not in prior_stats]
     file_stats = {
         **{f: prior_stats[f] for f in files if f in prior_stats},
@@ -321,35 +353,29 @@ def _commit(
     # forward for retained ones, exactly like file_stats
     bloom_cfg = _bloom_config(path)
     if bloom_cfg:
-        prior_blooms = (
-            _read_manifest(path, base_version).get("file_blooms", {})
-            if base_version
-            else {}
-        )
+        prior_blooms = base.get("file_blooms", {})
         new_bloom = [f for f in files if f not in prior_blooms]
         manifest["file_blooms"] = {
             **{f: prior_blooms[f] for f in files if f in prior_blooms},
             **_collect_file_blooms(path, new_bloom, bloom_cfg),
         }
         manifest["bloom_cfg"] = bloom_cfg
+    os.makedirs(_manifest_dir(path), exist_ok=True)
+    final = _manifest_path(path, version)
+    tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh)
     try:
-        with open(_manifest_path(path, version), "x") as fh:
-            json.dump(manifest, fh)
-    except FileExistsError as exc:  # lost the race for this version number
+        os.link(tmp, final)  # exclusive create of the whole manifest
+    except FileExistsError as exc:
         raise CommitConflict(f"version {version} already committed") from exc
+    finally:
+        os.remove(tmp)
     tmp = _current_path(path) + f".{uuid.uuid4().hex[:8]}.tmp"
     with open(tmp, "w") as fh:
         fh.write(str(version))
     os.replace(tmp, _current_path(path))
     return version
-
-
-def _next_free_version(path: str, candidate: int) -> int:
-    # skip orphaned manifests from crashed commits (manifest written,
-    # pointer never flipped) — their version numbers are burned
-    while os.path.exists(_manifest_path(path, candidate)):
-        candidate += 1
-    return candidate
 
 
 def _head_txn(path: str, base: int) -> dict[str, int]:
@@ -358,22 +384,85 @@ def _head_txn(path: str, base: int) -> dict[str, int]:
     return _read_manifest(path, base).get("txn", {})
 
 
+def _gate(
+    txn: dict[str, int], app_id: str | None, batch_id: int | None
+) -> dict[str, int] | None:
+    """The exactly-once gate, checked on the head a commit builds on:
+    ``txn`` advanced to (``app_id``, ``batch_id``), or None when that head
+    already holds the batch (a replay).  Without an app id, ``txn`` as is."""
+    if app_id is None:
+        return txn
+    if app_id in txn and batch_id <= txn[app_id]:
+        return None
+    return {**txn, app_id: batch_id}
+
+
+def commit_replace(
+    path: str,
+    build: Callable[[int], DataFrame],
+    op: str,
+    txn: tuple[str, int] | None = None,
+    n_files: int | None = None,
+) -> int | None:
+    """Read-modify-write commit: ``build(base)`` returns the table's new
+    contents computed from version ``base`` (0: no table yet), and they
+    replace the file list as version ``base + 1``.
+
+    On :class:`CommitConflict` the written files are deleted and ``build``
+    re-runs on the new head — the optimistic retry that lets concurrent
+    writers of one table all land.  ``txn=(app_id, batch_id)`` passes the
+    commit through the same watermark gate as :func:`idempotent_append`;
+    a batch the head already holds returns None without writing.
+    Returns the committed version otherwise.
+    """
+    app_id, batch_id = txn if txn is not None else (None, None)
+    os.makedirs(path, exist_ok=True)
+    while True:
+        base = current_version(path)
+        new_txn = _gate(_head_txn(path, base), app_id, batch_id)
+        if new_txn is None:
+            return None
+        files = _write_data_files(build(base), path, n_files)
+        try:
+            return _commit(path, base, files, op, new_txn)
+        except CommitConflict:
+            _discard(path, files)
+
+
+def _append_files(
+    path: str,
+    files: list[str],
+    op: str,
+    app_id: str | None = None,
+    batch_id: int | None = None,
+) -> int | None:
+    """Commit ``files`` on top of the head.  An append does not depend on
+    the rows it lands on, so a lost race rebases onto the new head —
+    re-checking the watermark there — instead of rewriting data."""
+    while True:
+        base = current_version(path)
+        head = _read_manifest(path, base) if base else {}
+        txn = _gate(head.get("txn", {}), app_id, batch_id)
+        if txn is None:  # a concurrent delivery of this batch landed first
+            _discard(path, files)
+            return None
+        try:
+            return _commit(path, base, head.get("files", []) + files, op, txn)
+        except CommitConflict:
+            continue
+
+
 def create_or_replace(df: DataFrame, path: str, n_files: int | None = None) -> int:
     """Commit ``df`` as a full snapshot (version 1 for a new table).
     Returns the committed version."""
-    os.makedirs(path, exist_ok=True)
-    base = current_version(path)
-    files = _write_data_files(df, path, n_files)
-    return _commit(path, base, files, "create_or_replace", _head_txn(path, base))
+    return commit_replace(path, lambda _base: df, "create_or_replace", n_files=n_files)
 
 
 def append(df: DataFrame, path: str, n_files: int | None = None) -> int:
     """Commit ``df``'s rows on top of the current snapshot (new manifest =
-    old file list + new files; no data file is rewritten)."""
-    base = current_version(path)
-    prior = _read_manifest(path, base)["files"] if base else []
-    files = _write_data_files(df, path, n_files)
-    return _commit(path, base, prior + files, "append", _head_txn(path, base))
+    head file list + new files; no data file is rewritten)."""
+    os.makedirs(path, exist_ok=True)
+    return _append_files(path, _write_data_files(df, path, n_files), "append")
 
 
 def idempotent_append(
@@ -385,27 +474,23 @@ def idempotent_append(
 
     This is the table-side half of exactly-once — the checkpoint replays
     a batch after a crash, and the transaction watermark in the manifest
-    deduplicates the replay (Delta paper §3.2 "txn" action).  The check
-    and the commit race safely: the watermark is read from the same head
-    version the commit is built on, and a concurrent commit of the same
-    version loses on the exclusive manifest create.
+    deduplicates the replay (Delta paper §3.2 "txn" action).  The gate is
+    checked before the data write (a replay writes nothing) and again on
+    the head the commit lands on, so a concurrent delivery of the same
+    batch commits once.
     """
-    base = current_version(path)
-    txn = _head_txn(path, base)
-    if app_id in txn and batch_id <= txn[app_id]:
+    if _gate(_head_txn(path, current_version(path)), app_id, batch_id) is None:
         return None
     os.makedirs(path, exist_ok=True)
-    prior = _read_manifest(path, base)["files"] if base else []
     files = _write_data_files(df, path, n_files)
-    txn = {**txn, app_id: batch_id}
-    return _commit(path, base, prior + files, f"stream_append[{batch_id}]", txn)
+    return _append_files(path, files, f"stream_append[{batch_id}]", app_id, batch_id)
 
 
 def stream_sink(path: str, app_id: str, n_files: int | None = None):
     """``foreachBatch`` adapter: ``writeStream.foreachBatch(stream_sink(
     table, app_id))`` gives exactly-once versioned-table appends — the
     checkpoint provides replay, :func:`idempotent_append` provides
-    dedup, the pointer flip provides atomic publish."""
+    dedup, the manifest publish makes the commit atomic."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         idempotent_append(batch_df, path, app_id, int(batch_id), n_files)
@@ -497,48 +582,67 @@ def compact(
 ) -> int:
     """OPTIMIZE for the versioned table: rewrite the current snapshot into
     ~``target_file_bytes`` files and commit the replacement manifest.
-    Unlike :func:`writers.compact_parquet` the table never goes absent —
-    readers on the old version keep their (still present) files; the
-    pointer flip is the only mutation.  Returns the new version."""
-    base = current_version(path)
-    files = _read_manifest(path, base)["files"]
-    total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
+    The table never goes absent — readers on the old version keep their
+    (still present) files; the manifest publish is the only mutation.
+    Returns the new version."""
+    head = current_version(path)
+    total = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in _read_manifest(path, head)["files"]
+    )
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = read_snapshot(spark, path, base)
-    new_files = _write_data_files(df, path, n_files)
-    return _commit(path, base, new_files, "compact", _head_txn(path, base))
+    return commit_replace(
+        path, lambda base: read_snapshot(spark, path, base), "compact", n_files=n_files
+    )
+
+
+def zorder_key_expr(col_a: str, col_b: str, bits: int = 20) -> "F.Column":
+    """Z-order (Morton) interleave of two non-negative integer columns:
+    bit i of ``col_a`` lands at position 2i, bit i of ``col_b`` at 2i+1.
+    Built from plain shift/mask expressions — pure JVM codegen, no UDF.
+
+    ``bits`` per column (default 20 -> 40-bit key) must cover the
+    columns' value range; values are masked to ``bits`` so overflow
+    degrades locality, never correctness.
+    """
+    terms = []
+    for i in range(bits):
+        terms.append(f"(((({col_a}) >> {i}) & 1) << {2 * i})")
+        terms.append(f"(((({col_b}) >> {i}) & 1) << {2 * i + 1})")
+    return F.expr(" | ".join(terms))
 
 
 def optimize_zorder(
     spark, path: str, col_a: str, col_b: str, bits: int = 16, n_files: int = 8
 ) -> int:
     """OPTIMIZE ZORDER BY (col_a, col_b): rewrite the current snapshot
-    clustered on the Morton interleave of the two (min/max-normalized)
-    columns and commit it as a new version — same pointer-flip publish
-    as :func:`compact`, so readers never block and time travel still
-    reaches the un-clustered history.
+    clustered on the Morton interleave of the two columns and commit it
+    as a new version — same manifest publish as :func:`compact`, so
+    readers never block and time travel still reaches the un-clustered
+    history.
 
-    After the rewrite, a range predicate on EITHER column skips row
-    groups via footer stats (the lakehouse OPTIMIZE ZORDER semantics;
-    skipping asserted in test_versioned). The 4-number min/max stats are
-    collected driver-side — planning metadata, not data — and the sort
-    is expression-based so the table schema is unchanged (no persisted
-    key column).
+    Both columns are NORMALIZED to the full ``bits`` range first
+    (min/max-stretched): interleaving raw values degrades to a one-column
+    sort whenever the ranges are unequal, because the wider column owns
+    every high bit.  After the rewrite, a range predicate on EITHER column
+    skips files and row groups via stats (asserted in test_versioned).
+    The 4-number min/max stats are collected driver-side — planning
+    metadata, not data — and the sort is expression-based so the table
+    schema is unchanged (no persisted key column).
     """
-    from real_estate_project1_etl_spark.sinks.writers import zorder_key_expr
 
-    base = current_version(path)
-    df = read_snapshot(spark, path, base)
-    mna, mxa, mnb, mxb = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).first()
-    top = (1 << bits) - 1
-    na = f"cast((({col_a}) - {mna}) * {top} div greatest({mxa - mna}, 1) as bigint)"
-    nb = f"cast((({col_b}) - {mnb}) * {top} div greatest({mxb - mnb}, 1) as bigint)"
-    zkey = zorder_key_expr(f"({na})", f"({nb})", bits)
-    arranged = df.repartitionByRange(n_files, zkey).sortWithinPartitions(zkey)
-    new_files = _write_data_files(arranged, path, None)
-    return _commit(path, base, new_files, "optimize_zorder", _head_txn(path, base))
+    def build(base: int) -> DataFrame:
+        df = read_snapshot(spark, path, base)
+        mna, mxa, mnb, mxb = df.agg(
+            F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
+        ).first()
+        top = (1 << bits) - 1
+        na = f"cast((({col_a}) - {mna}) * {top} div greatest({mxa - mna}, 1) as bigint)"
+        nb = f"cast((({col_b}) - {mnb}) * {top} div greatest({mxb - mnb}, 1) as bigint)"
+        zkey = zorder_key_expr(f"({na})", f"({nb})", bits)
+        return df.repartitionByRange(n_files, zkey).sortWithinPartitions(zkey)
+
+    return commit_replace(path, build, "optimize_zorder")
 
 
 def upsert(
@@ -551,31 +655,107 @@ def upsert(
 ) -> int:
     """MERGE (SCD1) against the current snapshot: updates win per key
     (ties broken by ``order_col`` desc when given), result committed as a
-    full replacement manifest.  Same one-window-shuffle shape as
-    :func:`writers.upsert_parquet`, but the publish is a pointer flip —
-    object-store safe, and concurrent readers never block."""
+    full replacement manifest.  One window shuffle: union the snapshot
+    with the updates (updates ranked first via a source tag), keep
+    row_number()==1 per key.  Re-applying the same updates is idempotent."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    base = current_version(path)
-    tagged = updates.withColumn("_src", F.lit(1))
-    if base:
-        current = read_snapshot(spark, path, base).withColumn("_src", F.lit(0))
-        merged = tagged.unionByName(current)
-    else:
-        os.makedirs(path, exist_ok=True)
-        merged = tagged
     order = [F.col("_src").desc()]
     if order_col:
         order.insert(0, F.col(order_col).desc())
     w = Window.partitionBy(*key_cols).orderBy(*order)
-    out = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    files = _write_data_files(out, path, n_files)
-    return _commit(path, base, files, "upsert", _head_txn(path, base))
+
+    def build(base: int) -> DataFrame:
+        merged = updates.withColumn("_src", F.lit(1))
+        if base:
+            current = read_snapshot(spark, path, base).withColumn("_src", F.lit(0))
+            merged = merged.unionByName(current)
+        return (
+            merged.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
+
+    return commit_replace(path, build, "upsert", n_files=n_files)
+
+
+def scd2_upsert(
+    spark,
+    updates: DataFrame,
+    path: str,
+    key_cols: list[str],
+    effective_col: str,
+) -> int:
+    """SCD2 (history-keeping) upsert: instead of overwriting a key's row
+    (SCD1, :func:`upsert`), the previous version is CLOSED (``_valid_to``
+    set to the update's effective time) and the new version appended OPEN
+    (``_valid_to`` NULL) — every past state stays queryable with an as-of
+    predicate (``_valid_from <= t AND (_valid_to IS NULL OR _valid_to > t)``).
+
+    ``updates`` must hold one row per key (latest wins upstream) and carry
+    ``effective_col``; attribute change is detected on every non-key,
+    non-effective column (NULLs compared via a sentinel). Unchanged keys
+    keep their open row — re-delivering the same batch leaves the rows
+    as they were.
+
+    Plan: one key-equi join of the open slice against the update batch
+    (update side broadcast), closed history passes through untouched;
+    the result replaces the snapshot in one commit.
+    """
+    attr_cols = [
+        c for c in updates.columns if c not in (*key_cols, effective_col)
+    ]
+
+    def with_hash(df: DataFrame) -> DataFrame:
+        marked = [
+            F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in attr_cols
+        ]
+        return df.withColumn("_ah", F.sha2(F.concat_ws("\x1f", *marked), 256))
+
+    fresh = with_hash(updates).withColumn(
+        "_valid_from", F.col(effective_col)
+    ).withColumn("_valid_to", F.lit(None).cast(updates.schema[effective_col].dataType))
+
+    def build(base: int) -> DataFrame:
+        if not base:
+            return fresh.drop("_ah")
+        current = with_hash(read_snapshot(spark, path, base))
+        closed = current.filter(F.col("_valid_to").isNotNull()).drop("_ah")
+        open_ = current.filter(F.col("_valid_to").isNull())
+
+        upd_key = fresh.select(
+            *[F.col(k).alias(f"_u_{k}") for k in key_cols],
+            F.col("_ah").alias("_u_ah"),
+            F.col("_valid_from").alias("_u_from"),
+        )
+        cond = [F.col(k) == F.col(f"_u_{k}") for k in key_cols]
+        joined = open_.join(F.broadcast(upd_key), cond, "left")
+
+        # open rows: unmatched or same attributes stay open; changed close
+        still_open = joined.filter(
+            F.col("_u_ah").isNull() | (F.col("_ah") == F.col("_u_ah"))
+        ).select(*open_.columns).drop("_ah")
+        newly_closed = joined.filter(
+            F.col("_u_ah").isNotNull() & (F.col("_ah") != F.col("_u_ah"))
+        ).withColumn("_valid_to", F.col("_u_from")).select(*open_.columns).drop("_ah")
+
+        # incoming rows: new key, or key whose open row had different attrs
+        open_key = open_.select(
+            *[F.col(k).alias(f"_o_{k}") for k in key_cols],
+            F.col("_ah").alias("_o_ah"),
+        )
+        cond2 = [F.col(k) == F.col(f"_o_{k}") for k in key_cols]
+        incoming = (
+            fresh.join(F.broadcast(open_key), cond2, "left")
+            .filter(F.col("_o_ah").isNull() | (F.col("_ah") != F.col("_o_ah")))
+            .select(*fresh.columns)
+            .drop("_ah")
+        )
+        return closed.unionByName(still_open).unionByName(newly_closed).unionByName(
+            incoming
+        )
+
+    return commit_replace(path, build, "scd2_upsert")
 
 
 def table_diff(
@@ -626,31 +806,36 @@ def table_diff(
 
 
 def vacuum(path: str, keep_last: int = 1) -> int:
-    """Delete data files referenced only by expired versions (older than
-    the newest ``keep_last``), plus their manifests.  Returns the number
-    of data files removed.  Time travel reaches only kept versions
-    afterwards."""
+    """Delete the data files of expired versions (older than the newest
+    ``keep_last``) that no kept version lists, plus the expired manifests.
+    Returns the number of data files removed.
+
+    Only files an expired manifest lists are candidates, so files a
+    concurrent writer has written but not yet committed are never touched
+    (nor are the unlisted files of crashed commits).  Time travel reaches
+    only kept versions afterwards."""
     head = current_version(path)
     keep_from = max(1, head - keep_last + 1)
+    expired = [v for v in _manifest_versions(path) if v < keep_from]
     keep: set[str] = set()
     for v in range(keep_from, head + 1):
-        if os.path.exists(_manifest_path(path, v)):
-            keep.update(_read_manifest(path, v)["files"])
+        keep.update(_read_manifest(path, v)["files"])
+    doomed: set[str] = set()
+    for v in expired:
+        doomed.update(_read_manifest(path, v)["files"])
     removed = 0
-    data_root = os.path.join(path, "data")
-    for commit_dir in os.listdir(data_root) if os.path.isdir(data_root) else []:
-        cdir = os.path.join(data_root, commit_dir)
-        for f in os.listdir(cdir):
-            rel = os.path.join("data", commit_dir, f)
-            if f.endswith(".parquet") and rel not in keep:
-                os.remove(os.path.join(cdir, f))
-                removed += 1
-        if not any(f.endswith(".parquet") for f in os.listdir(cdir)):
-            import shutil
-
+    for rel in doomed - keep:
+        try:
+            os.remove(os.path.join(path, rel))
+            removed += 1
+        except FileNotFoundError:  # an interrupted earlier vacuum got it
+            pass
+    for d in {os.path.dirname(rel) for rel in doomed - keep}:
+        cdir = os.path.join(path, d)
+        if os.path.isdir(cdir) and not any(
+            f.endswith(".parquet") for f in os.listdir(cdir)
+        ):
             shutil.rmtree(cdir)
-    for v in range(1, keep_from):
-        mp = _manifest_path(path, v)
-        if os.path.exists(mp):
-            os.remove(mp)
+    for v in expired:
+        os.remove(_manifest_path(path, v))
     return removed

@@ -11,6 +11,10 @@ Upgrades over the reference:
   (``price_for_m2`` vs ``price_per_m2``, load_db.py:42);
 - no hand-rolled archive/delete protocol — exactly-once is the streaming
   checkpoint's job (see ``streaming/file_pipeline.py``).
+
+These writers only create or append; a table that is later merged,
+compacted or folded into is a versioned table (:mod:`.versioned`), the
+engine's one commit protocol.
 """
 
 from __future__ import annotations
@@ -74,82 +78,6 @@ def write_jdbc(
     writer.save()
 
 
-def _recover_swap(path: str, tag: str) -> None:
-    """Heal a crash inside a previous :func:`_swap_dir` window: if the
-    table vanished but its ``._{tag}_old`` sibling survived, restore it;
-    drop any stale ``._{tag}_tmp`` so the rewrite starts clean."""
-    import os
-    import shutil
-
-    old = path.rstrip("/") + f"._{tag}_old"
-    tmp = path.rstrip("/") + f"._{tag}_tmp"
-    if not os.path.isdir(path) and os.path.isdir(old):
-        shutil.move(old, path)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-
-
-def _swap_dir(path: str, tmp: str, tag: str) -> None:
-    """Swap the rewritten directory ``tmp`` into place at ``path``.
-
-    LOCAL FILESYSTEM ONLY (os.rename/shutil semantics): object stores
-    (``s3a://``) have no atomic directory rename — there, use a table
-    format whose metadata commit provides the swap: this repo ships one
-    (:mod:`real_estate_project1_etl_spark.sinks.versioned`, a
-    manifest-pointer format whose publish is a single-file replace).
-    These plain-parquet sinks are the single-node/POSIX tier.
-
-    Crash tolerance: the old directory is deleted LAST, so a crash at any
-    point leaves the data recoverable — before step 2 the table is briefly
-    absent but intact under ``._{tag}_old`` (and :func:`_recover_swap`
-    restores it on the next call); after step 2 the table is live.
-    """
-    import os
-    import shutil
-
-    if os.path.isdir(path):
-        old = path.rstrip("/") + f"._{tag}_old"
-        shutil.move(path, old)       # 1. park the current table
-        shutil.move(tmp, path)       # 2. new table live
-        shutil.rmtree(old)           # 3. cleanup last
-    else:
-        shutil.move(tmp, path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ~``target_file_bytes`` files and atomically swap it in.
-
-    Streaming appends (one file per micro-batch per partition) accumulate
-    small files that tax the scan planner and the object store at 100 TB;
-    periodic compaction restores the ~128 MB file size the splitter
-    expects. File count = ceil(input_bytes / target); the rewrite is one
-    job (coalesce, no shuffle), the swap is a directory rename. Returns
-    the new file count. (On a table format — Delta/Iceberg — this is
-    OPTIMIZE; this is the plain-parquet equivalent.)
-    """
-    import math
-    import os
-
-    _recover_swap(path, "compact")
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    _swap_dir(path, tmp, "compact")
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
-
-
 def write_range_sorted(
     df: DataFrame,
     path: str,
@@ -179,206 +107,6 @@ def write_range_sorted(
     (
         df.repartitionByRange(partitions, sort_col)
         .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def upsert_parquet(
-    spark,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    order_col: str | None = None,
-) -> None:
-    """SCD1 upsert into a plain-parquet table: new rows win over existing
-    rows with the same key; the rewritten table swaps in atomically.
-
-    The reference can only append (load_db.py:47) and leaves dedup to the
-    dashboard; this gives the lakehouse-side merge. Mechanics: union the
-    existing table with the updates (updates ranked first via a source
-    tag, or by ``order_col`` when given), keep row_number()==1 per key,
-    rewrite to a temp dir, swap. On a table format (Delta/Iceberg) this is
-    MERGE INTO; the one-shuffle window shape is identical.
-    """
-    import os
-
-    from pyspark.sql import Window
-
-    _recover_swap(path, "upsert")
-    if os.path.isdir(path):
-        current = spark.read.parquet(path).withColumn("_src", F.lit(0))
-    else:
-        current = None
-    tagged = updates.withColumn("_src", F.lit(1))
-    merged = tagged if current is None else tagged.unionByName(current)
-    order = [F.col("_src").desc()]
-    if order_col:
-        order.insert(0, F.col(order_col).desc())
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    out = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-    tmp = path.rstrip("/") + "._upsert_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    _swap_dir(path, tmp, "upsert")
-
-
-def scd2_upsert(
-    spark,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    effective_col: str,
-) -> None:
-    """SCD2 (history-keeping) upsert into a plain-parquet table: instead of
-    overwriting a key's row (SCD1, ``upsert_parquet``), the previous
-    version is CLOSED (``_valid_to`` set to the update's effective time)
-    and the new version appended OPEN (``_valid_to`` NULL) — every past
-    state stays queryable with an as-of predicate
-    (``_valid_from <= t AND (_valid_to IS NULL OR _valid_to > t)``).
-
-    ``updates`` must hold one row per key (latest wins upstream) and carry
-    ``effective_col``; attribute change is detected on every non-key,
-    non-effective column (NULLs compared via a sentinel). Unchanged keys
-    are a no-op — re-delivering the same batch is idempotent.
-
-    Scale shape: one key-equi join of the open slice against the update
-    batch (update side broadcastable when small), closed history passes
-    through untouched; rewrite + atomic swap like the SCD1 path. On a
-    table format (Delta/Iceberg) the same plan runs as MERGE INTO without
-    the rewrite.
-    """
-    import os
-
-    _recover_swap(path, "scd2")
-    attr_cols = [
-        c for c in updates.columns if c not in (*key_cols, effective_col)
-    ]
-
-    def with_hash(df: DataFrame) -> DataFrame:
-        marked = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in attr_cols
-        ]
-        return df.withColumn("_ah", F.sha2(F.concat_ws("\x1f", *marked), 256))
-
-    fresh = with_hash(updates).withColumn(
-        "_valid_from", F.col(effective_col)
-    ).withColumn("_valid_to", F.lit(None).cast(updates.schema[effective_col].dataType))
-
-    if os.path.isdir(path):
-        current = with_hash(spark.read.parquet(path))
-        closed = current.filter(F.col("_valid_to").isNotNull()).drop("_ah")
-        open_ = current.filter(F.col("_valid_to").isNull())
-
-        upd_key = fresh.select(
-            *[F.col(k).alias(f"_u_{k}") for k in key_cols],
-            F.col("_ah").alias("_u_ah"),
-            F.col("_valid_from").alias("_u_from"),
-        )
-        cond = [F.col(k) == F.col(f"_u_{k}") for k in key_cols]
-        joined = open_.join(F.broadcast(upd_key), cond, "left")
-
-        # open rows: unmatched or same attributes stay open; changed close
-        still_open = joined.filter(
-            F.col("_u_ah").isNull() | (F.col("_ah") == F.col("_u_ah"))
-        ).select(*open_.columns).drop("_ah")
-        newly_closed = joined.filter(
-            F.col("_u_ah").isNotNull() & (F.col("_ah") != F.col("_u_ah"))
-        ).withColumn("_valid_to", F.col("_u_from")).select(*open_.columns).drop("_ah")
-
-        # incoming rows: new key, or key whose open row had different attrs
-        open_key = open_.select(
-            *[F.col(k).alias(f"_o_{k}") for k in key_cols],
-            F.col("_ah").alias("_o_ah"),
-        )
-        cond2 = [F.col(k) == F.col(f"_o_{k}") for k in key_cols]
-        incoming = (
-            fresh.join(F.broadcast(open_key), cond2, "left")
-            .filter(F.col("_o_ah").isNull() | (F.col("_ah") != F.col("_o_ah")))
-            .select(*fresh.columns)
-            .drop("_ah")
-        )
-        out = closed.unionByName(still_open).unionByName(newly_closed).unionByName(
-            incoming
-        )
-    else:
-        out = fresh.drop("_ah")
-
-    tmp = path.rstrip("/") + "._scd2_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    _swap_dir(path, tmp, "scd2")
-
-
-def zorder_key_expr(col_a: str, col_b: str, bits: int = 20) -> "F.Column":
-    """Z-order (Morton) interleave of two non-negative integer columns:
-    bit i of ``col_a`` lands at position 2i, bit i of ``col_b`` at 2i+1.
-    Built from plain shift/mask expressions — pure JVM codegen, no UDF.
-
-    ``bits`` per column (default 20 -> 40-bit key) must cover the
-    columns' value range; values are masked to ``bits`` so overflow
-    degrades locality, never correctness.
-    """
-    terms = []
-    for i in range(bits):
-        terms.append(f"(((({col_a}) >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((({col_b}) >> {i}) & 1) << {2 * i + 1})")
-    return F.expr(" | ".join(terms))
-
-
-def write_zorder_sorted(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    partitions: int = 8,
-    bits: int = 20,
-) -> None:
-    """Two-dimensional clustered layout: range-partition + sort on the
-    Z-order interleave of ``(col_a, col_b)``, so row-group min/max stats
-    are tight on BOTH columns at once — a range predicate on EITHER
-    column skips row groups, which one-column sorting (clustered index)
-    only gives for its single sort key.
-
-    This is the standard multi-dimensional clustering trick of
-    lakehouse table formats (Z-ordering / space-filling curves): points
-    close in Z-key are close in both dimensions, so each row group
-    covers a small rectangle of the (a, b) space instead of a thin
-    full-width stripe. The layout column ``_zkey`` is written so later
-    OPTIMIZE-style rewrites can re-cluster incrementally.
-
-    Both columns are NORMALIZED to the full ``bits`` range first
-    (min/max-stretched, computed as a single-row aggregate broadcast —
-    no driver collect). Interleaving raw values degrades to a one-column
-    sort whenever the ranges are unequal: the wider column owns every
-    high bit, so the curve never alternates dimensions (measured: a
-    13-bit x 8-bit interleave skipped nothing on the narrow column).
-
-    At 100 TB: identical plan — one tiny stats agg, then
-    repartitionByRange samples the z-key distribution, the sort is
-    within partitions, and the write parallelism is ``partitions``.
-    """
-    stats = df.agg(
-        F.min(col_a).alias("_mna"),
-        F.max(col_a).alias("_mxa"),
-        F.min(col_b).alias("_mnb"),
-        F.max(col_b).alias("_mxb"),
-    )
-    top = (1 << bits) - 1
-    na = f"cast((({col_a}) - _mna) * {top} div greatest(_mxa - _mna, 1) as bigint)"
-    nb = f"cast((({col_b}) - _mnb) * {top} div greatest(_mxb - _mnb, 1) as bigint)"
-    zdf = (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn("_na", F.expr(na))
-        .withColumn("_nb", F.expr(nb))
-        .withColumn("_zkey", zorder_key_expr("_na", "_nb", bits))
-        .drop("_mna", "_mxa", "_mnb", "_mxb", "_na", "_nb")
-    )
-    (
-        zdf.repartitionByRange(partitions, "_zkey")
-        .sortWithinPartitions("_zkey")
         .write.mode("overwrite")
         .parquet(path)
     )

@@ -1,8 +1,7 @@
-"""Data-quality split and parquet compaction utilities."""
+"""Data-quality split, and compaction / SCD1 / SCD2 merges on versioned
+parquet tables."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -10,7 +9,7 @@ from real_estate_project1_etl_spark.operators.quality import (
     properties_rules,
     validate,
 )
-from real_estate_project1_etl_spark.sinks.writers import compact_parquet
+from real_estate_project1_etl_spark.sinks import versioned as V
 
 
 def test_validate_routes_and_names_violations(spark):
@@ -36,50 +35,47 @@ def test_validate_routes_and_names_violations(spark):
 def test_compaction_reduces_file_count(spark, tmp_path):
     path = str(tmp_path / "frag")
     # 40 tiny files (streaming-append pattern)
-    spark.range(0, 40_000).repartition(40).write.parquet(path)
-    before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    V.create_or_replace(spark.range(0, 40_000).repartition(40), path)
+    before = V.history(path)[-1]["n_files"]
     assert before == 40
-    after = compact_parquet(spark, path)
+    V.compact(spark, path)
+    after = V.history(path)[-1]["n_files"]
     assert after < before
-    back = spark.read.parquet(path)
+    back = V.read_snapshot(spark, path)
     assert back.count() == 40_000
     assert back.agg(F.sum("id")).collect()[0][0] == sum(range(40_000))
 
 
 def test_upsert_parquet_scd1(spark, tmp_path):
-    from real_estate_project1_etl_spark.sinks.writers import upsert_parquet
-
     path = str(tmp_path / "tbl")
     v1 = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20)], "k int, name string, v int"
     )
-    upsert_parquet(spark, v1, path, ["k"])
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == {
+    V.upsert(spark, v1, path, ["k"])
+    assert {tuple(r) for r in V.read_snapshot(spark, path).collect()} == {
         (1, "a", 10), (2, "b", 20)
     }
     # update key 2, insert key 3 -> key 1 untouched, key 2 replaced
     v2 = spark.createDataFrame(
         [(2, "b2", 21), (3, "c", 30)], "k int, name string, v int"
     )
-    upsert_parquet(spark, v2, path, ["k"])
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == {
+    V.upsert(spark, v2, path, ["k"])
+    assert {tuple(r) for r in V.read_snapshot(spark, path).collect()} == {
         (1, "a", 10), (2, "b2", 21), (3, "c", 30)
     }
     # idempotent re-apply
-    upsert_parquet(spark, v2, path, ["k"])
-    assert spark.read.parquet(path).count() == 3
+    V.upsert(spark, v2, path, ["k"])
+    assert V.read_snapshot(spark, path).count() == 3
 
 
 def test_scd2_upsert_keeps_history(spark, tmp_path):
-    from real_estate_project1_etl_spark.sinks.writers import scd2_upsert
-
     path = str(tmp_path / "dim")
     v1 = spark.createDataFrame(
         [(1, "praha", 100), (2, "brno", 200)], "k bigint, city string, v int"
     ).withColumn("eff", F.lit("2026-01-01"))
-    scd2_upsert(spark, v1, path, ["k"], "eff")
+    V.scd2_upsert(spark, v1, path, ["k"], "eff")
 
-    t1 = spark.read.parquet(path)
+    t1 = V.read_snapshot(spark, path)
     assert t1.count() == 2
     assert t1.filter(F.col("_valid_to").isNull()).count() == 2
 
@@ -88,9 +84,9 @@ def test_scd2_upsert_keeps_history(spark, tmp_path):
         [(1, "praha", 150), (2, "brno", 200), (3, "plzen", 300)],
         "k bigint, city string, v int",
     ).withColumn("eff", F.lit("2026-02-01"))
-    scd2_upsert(spark, v2, path, ["k"], "eff")
+    V.scd2_upsert(spark, v2, path, ["k"], "eff")
 
-    t2 = spark.read.parquet(path)
+    t2 = V.read_snapshot(spark, path)
     rows = {(r["k"], r["_valid_from"], r["_valid_to"], r["v"]) for r in t2.collect()}
     assert rows == {
         (1, "2026-01-01", "2026-02-01", 100),  # closed old version
@@ -100,8 +96,8 @@ def test_scd2_upsert_keeps_history(spark, tmp_path):
     }
 
     # idempotent: same batch again changes nothing
-    scd2_upsert(spark, v2, path, ["k"], "eff")
-    t3 = spark.read.parquet(path)
+    V.scd2_upsert(spark, v2, path, ["k"], "eff")
+    t3 = V.read_snapshot(spark, path)
     assert t3.count() == 4
 
     # as-of query surfaces exactly one version per key

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_estate_project1_etl_spark.plans import rollup as R
+from real_estate_project1_etl_spark.sinks import versioned as V
 from real_estate_project1_etl_spark.sources.parquet import load_table
 
 
@@ -143,7 +144,7 @@ def test_update_rollup_fold_equals_recompute(spark, sf_dir, tmp_path):
          for r in R.query_rollup(spark, full, grain, q).collect()}
     assert a == b  # decimal partials: the fold is EXACT, not approximate
 
-    # meta sidecar survives the swap; served queries still route correctly
+    # the meta sidecar is untouched by folds; served queries still route
     assert R.rollup_meta(inc)["group_cols"] == grain
 
 
@@ -177,87 +178,103 @@ def test_rollup_stream_sink_replay_is_exactly_once(spark, sf_dir, tmp_path):
     assert R.rollup_meta(path)["txn"] == {"loader-1": 1}
 
 
-def test_update_rollup_excluded_while_lock_held(spark, sf_dir, tmp_path):
-    # ADVICE rounds 2+3: concurrent folders serialize on an fcntl.flock
-    # held for the WHOLE fold (not an exclusive-create file whose mtime a
-    # newcomer could misjudge as stale and unlink from under a live
-    # holder).  Simulate a live holder by flocking the persistent lock
-    # file; the second folder must block until the flock releases, then
-    # fold correctly.  flock treats separately-opened fds in one process
-    # as independent holders, so the simulation is faithful.
-    import fcntl
-    import os
+def _sum_by_flag(spark, path):
+    q = R.query_rollup(spark, path, ["l_returnflag"], {"sum_qty": ("sum", "l_quantity")})
+    return {r.l_returnflag: r.sum_qty for r in q.collect()}
+
+
+def test_concurrent_folds_both_land(spark, sf_dir, tmp_path, monkeypatch):
+    # two threads fold disjoint batches at once.  A barrier at each one's
+    # first head read makes both merge from the same version, so one
+    # commit must lose and re-merge on top of the other's fold: both
+    # folds and both watermarks land, and the result equals a recompute
     import threading
-    import time
-
-    from real_estate_project1_etl_spark.sources.parquet import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     specs = {"sum_qty": ("sum", "l_quantity")}
-    path = str(tmp_path / "locked")
-    R.materialize_rollup(li.filter(F.col("l_orderkey") % 2 == 0), path, ["l_returnflag"], specs)
+    grain = ["l_returnflag"]
+    path = str(tmp_path / "concurrent")
+    R.materialize_rollup(li.filter(F.col("l_orderkey") % 3 == 0), path, grain, specs)
 
-    lock = path.rstrip("/") + "._rollup_lock"
-    holder_fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-    fcntl.flock(holder_fd, fcntl.LOCK_EX)
-    t0 = time.monotonic()
-    done = threading.Event()
+    barrier = threading.Barrier(2, timeout=120)
+    first = threading.local()
+    bases = []
+    real_read = V.read_snapshot
 
-    def folder():
-        R.update_rollup(li.filter(F.col("l_orderkey") % 2 == 1), path)
-        done.set()
+    def read_after_both_resolved(spark_, path_, version=None, **kw):
+        bases.append(version)
+        if not getattr(first, "seen", False):
+            first.seen = True
+            barrier.wait()
+        return real_read(spark_, path_, version, **kw)
 
-    t = threading.Thread(target=folder, daemon=True)
-    t.start()
-    time.sleep(0.6)
-    assert not done.is_set(), "folder must block while the flock is held"
-    # a waiter never unlinks a LIVE holder's lock (the round-3 steal bug):
-    # the lock file must still exist and the holder's flock still be valid
-    assert os.path.exists(lock)
-    fcntl.flock(holder_fd, fcntl.LOCK_UN)
-    os.close(holder_fd)
-    t.join(timeout=60)
-    assert done.is_set(), "folder must proceed after release"
-    assert time.monotonic() - t0 > 0.5
-    got = R.query_rollup(spark, path, ["l_returnflag"], {"sum_qty": ("sum", "l_quantity")})
-    want = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("sum_qty"))
-    assert {
-        (r["l_returnflag"], float(r["sum_qty"])) for r in got.collect()
-    } == {(r["l_returnflag"], float(r["sum_qty"])) for r in want.collect()}
+    monkeypatch.setattr(V, "read_snapshot", read_after_both_resolved)
+    errors = []
 
-
-def test_update_rollup_wait_deadline_is_a_parameter(spark, sf_dir, tmp_path):
-    # ADVICE round 3: the old 120 s hard-coded deadline could crash a
-    # streaming foreachBatch while a HEALTHY long fold ran.  The deadline
-    # is now a parameter; a short one raises TimeoutError while the lock
-    # is legitimately held, and the holder's lock survives the timeout.
-    import fcntl
-    import os
-
-    import pytest
-
-    from real_estate_project1_etl_spark.sources.parquet import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    specs = {"sum_qty": ("sum", "l_quantity")}
-    path = str(tmp_path / "deadline")
-    R.materialize_rollup(li.limit(10), path, ["l_returnflag"], specs)
-
-    lock = path.rstrip("/") + "._rollup_lock"
-    holder_fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-    fcntl.flock(holder_fd, fcntl.LOCK_EX)
-    try:
-        with pytest.raises(TimeoutError):
-            R.update_rollup(li.limit(5), path, wait_timeout_s=0.5)
-        # the holder's flock was not disturbed by the timed-out waiter
-        probe = os.open(lock, os.O_RDWR)
+    def fold(mod, app_id):
         try:
-            with pytest.raises(OSError):
-                fcntl.flock(probe, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        finally:
-            os.close(probe)
-    finally:
-        fcntl.flock(holder_fd, fcntl.LOCK_UN)
-        os.close(holder_fd)
-    # after release the fold goes through with the default deadline
-    R.update_rollup(li.limit(5), path)
+            R.update_rollup(
+                li.filter(F.col("l_orderkey") % 3 == mod), path, txn=(app_id, 0)
+            )
+        except Exception as exc:  # noqa: BLE001 -- surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=fold, args=(m, f"app-{m}")) for m in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    monkeypatch.undo()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert sorted(bases) == [1, 1, 2]  # one lost race, one re-merge
+    assert R.rollup_meta(path)["txn"] == {"app-1": 0, "app-2": 0}
+
+    full = str(tmp_path / "full")
+    R.materialize_rollup(li, full, grain, specs)
+    assert _sum_by_flag(spark, path) == _sum_by_flag(spark, full)
+
+
+def test_fold_crash_then_replay_folds_once(spark, sf_dir, tmp_path, monkeypatch):
+    # crash a fold after its data write (no manifest), and after its
+    # manifest publish with the _CURRENT hint not updated; then replay the
+    # same (app_id, batch_id) as a restarted stream would.  Each batch
+    # must be folded exactly once.
+    class Crash(Exception):
+        pass
+
+    li = load_table(spark, sf_dir, "lineitem")
+    specs = {"sum_qty": ("sum", "l_quantity")}
+    grain = ["l_returnflag"]
+    full = str(tmp_path / "full")
+    R.materialize_rollup(li, full, grain, specs)
+    want = _sum_by_flag(spark, full)
+    batch = li.filter(F.col("l_orderkey") % 2 == 1)
+    real_commit = V._commit
+
+    def crash_after_data_write(*args, **kwargs):
+        raise Crash
+
+    def crash_after_manifest(path_, base, *args, **kwargs):
+        real_commit(path_, base, *args, **kwargs)
+        with open(V._current_path(path_), "w") as fh:
+            fh.write(str(base))
+        raise Crash
+
+    for name, crash, visible in [
+        ("after_data", crash_after_data_write, False),
+        ("after_manifest", crash_after_manifest, True),
+    ]:
+        path = str(tmp_path / name)
+        R.materialize_rollup(li.filter(F.col("l_orderkey") % 2 == 0), path, grain, specs)
+        prior = _sum_by_flag(spark, path)
+        monkeypatch.setattr(V, "_commit", crash)
+        with pytest.raises(Crash):
+            R.update_rollup(batch, path, txn=("loader", 7))
+        monkeypatch.undo()
+        # before the publish the prior fold is served; after it the
+        # manifest is the commit, even though the hint lags
+        assert _sum_by_flag(spark, path) == (want if visible else prior), name
+        R.update_rollup(batch, path, txn=("loader", 7))  # the replay
+        assert _sum_by_flag(spark, path) == want, name
+        assert R.rollup_meta(path)["txn"] == {"loader": 7}, name

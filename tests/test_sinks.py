@@ -1,19 +1,13 @@
-"""Sink tests: live JDBC round-trip (embedded Derby, K4), crash-tolerant
-directory swap recovery, and as-of join tiebreak typing."""
+"""Sink tests: live JDBC round-trip (embedded Derby, K4), silver
+partition pruning, and as-of join tiebreak typing."""
 
 from __future__ import annotations
 
 import datetime
-import os
-import shutil
 
 from pyspark.sql import functions as F
 
-from real_estate_project1_etl_spark.sinks.writers import (
-    _recover_swap,
-    upsert_parquet,
-    write_jdbc,
-)
+from real_estate_project1_etl_spark.sinks.writers import write_jdbc
 
 _PROPS_SCHEMA = (
     "purpose string, address string, region string, size_m2 int, "
@@ -100,28 +94,6 @@ def test_jdbc_round_trip_embedded_derby(spark, tmp_path):
     got = {tuple(r) for r in back.collect()}
     want = {tuple(r) for r in df.unionAll(df.limit(1)).collect()}
     assert got == want
-
-
-def test_swap_recovers_from_crash_window(spark, tmp_path):
-    # simulate a crash between "park old" and "new live": table dir gone,
-    # data stranded in ._upsert_old — the next sink call must restore it
-    path = str(tmp_path / "t")
-    base = spark.range(5).withColumnRenamed("id", "k").withColumn("v", F.lit("a"))
-    base.write.parquet(path)
-
-    shutil.move(path, path + "._upsert_old")          # crash window state
-    os.makedirs(path + "._upsert_tmp")                # stale tmp leftover
-    _recover_swap(path, "upsert")
-    assert os.path.isdir(path) and not os.path.isdir(path + "._upsert_tmp")
-    assert spark.read.parquet(path).count() == 5
-
-    # and an end-to-end upsert through the crash-window state heals + merges
-    shutil.move(path, path + "._upsert_old")
-    upd = spark.range(3, 8).withColumnRenamed("id", "k").withColumn("v", F.lit("b"))
-    upsert_parquet(spark, upd, path, ["k"])
-    rows = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {(0, "a"), (1, "a"), (2, "a")} | {(k, "b") for k in range(3, 8)}
-    assert not os.path.isdir(path + "._upsert_old")
 
 
 def test_asof_join_string_tiebreak(spark):

@@ -74,33 +74,88 @@ def test_upsert_on_missing_table_creates_it(spark, tmp_path):
     assert V.read_snapshot(spark, path).count() == 1
 
 
-def test_crashed_commit_is_invisible_and_version_number_burned(spark, tmp_path):
-    # simulate a crash AFTER the manifest create but BEFORE the pointer
-    # flip: readers stay on the old version; the next commit skips the
-    # burned version number instead of conflicting forever
+def test_crashed_commit_is_invisible_until_its_manifest_is_published(spark, tmp_path):
+    # the manifest publish is the commit: a crash after the data write
+    # leaves the table as it was and the version number free; a crash
+    # after the publish but before the _CURRENT hint update is committed,
+    # and readers roll forward past the stale hint
     path = str(tmp_path / "t")
     V.create_or_replace(_df(spark, [(1, "a")]), path)
-    orphan = V._manifest_path(path, 2)
-    with open(orphan, "x") as fh:
-        json.dump({"version": 2, "files": ["data/nope.parquet"], "op": "x",
-                   "committed_at": "never"}, fh)
+    V._write_data_files(_df(spark, [(9, "lost")]), path, 1)  # crash here
     assert V.current_version(path) == 1
-    assert V.read_snapshot(spark, path).count() == 1
-    v = V.append(_df(spark, [(2, "b")]), path)
-    assert v == 3  # skipped the orphaned 2
-    assert V.read_snapshot(spark, path).count() == 2
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {1}
+    assert V.append(_df(spark, [(2, "b")]), path) == 2
+
+    with open(V._current_path(path), "w") as fh:  # hint left behind
+        fh.write("1")
+    assert V.current_version(path) == 2
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {1, 2}
+    assert V.append(_df(spark, [(3, "c")]), path) == 3
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {1, 2, 3}
 
 
-def test_commit_conflict_detected(spark, tmp_path, monkeypatch):
-    # two writers race for the same version number: exclusive manifest
-    # create makes exactly one win
+def test_commit_conflict_detected(spark, tmp_path):
+    # two writers build on the same head: the first commit wins the next
+    # version; the second must conflict, not land one version higher
+    # without the first writer's files and watermark
     path = str(tmp_path / "t")
     V.create_or_replace(_df(spark, [(1, "a")]), path)
-    monkeypatch.setattr(V, "_next_free_version", lambda p, c: c)
-    with open(V._manifest_path(path, 2), "x") as fh:
-        fh.write("{}")
+    base = V.current_version(path)
+    prior = V._read_manifest(path, base)["files"]
+    files_a = V._write_data_files(_df(spark, [(2, "b")]), path, 1)
+    files_b = V._write_data_files(_df(spark, [(3, "c")]), path, 1)
+    assert V._commit(path, base, prior + files_a, "append", {"a": 0}) == base + 1
     with pytest.raises(V.CommitConflict):
-        V.append(_df(spark, [(2, "b")]), path)
+        V._commit(path, base, prior + files_b, "append", {"b": 0})
+    assert V.current_version(path) == base + 1
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {1, 2}
+    assert V._read_manifest(path, base + 1)["txn"] == {"a": 0}
+
+
+def test_concurrent_appends_rebase_and_both_land(spark, tmp_path, monkeypatch):
+    # both writers resolve the same head before either commits (a barrier
+    # at each one's first commit attempt): the loser rebases onto the
+    # winner's version, so both rows and both watermarks survive
+    import threading
+
+    path = str(tmp_path / "t")
+    V.create_or_replace(_df(spark, [(1, "a")]), path)
+    barrier = threading.Barrier(2, timeout=120)
+    first = threading.local()
+    attempts = []
+    real_commit = V._commit
+
+    def commit_after_both_resolved(*args, **kwargs):
+        attempts.append(args[1])
+        if not getattr(first, "seen", False):
+            first.seen = True
+            barrier.wait()
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(V, "_commit", commit_after_both_resolved)
+    errors = []
+
+    def writer(row, app):
+        try:
+            V.idempotent_append(_df(spark, [row]), path, app, 0)
+        except Exception as exc:  # noqa: BLE001 -- surfaced below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=writer, args=((2, "b"), "app-a")),
+        threading.Thread(target=writer, args=((3, "c"), "app-b")),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    monkeypatch.undo()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert sorted(attempts) == [1, 1, 2]  # one lost race, one rebase
+    assert V.current_version(path) == 3
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {1, 2, 3}
+    assert V._head_txn(path, 3) == {"app-a": 0, "app-b": 0}
 
 
 def test_vacuum_drops_expired_files_keeps_recent(spark, tmp_path):
@@ -115,6 +170,23 @@ def test_vacuum_drops_expired_files_keeps_recent(spark, tmp_path):
     # kept versions fully readable
     assert V.read_snapshot(spark, path, version=2).count() == 1
     assert {r.id for r in V.read_snapshot(spark, path, version=3).collect()} == {2, 3}
+
+
+def test_vacuum_never_deletes_uncommitted_files(spark, tmp_path):
+    # a writer's data files are in no manifest until its commit lands:
+    # vacuum deletes only files that expired manifests list, so the
+    # in-flight commit still publishes intact
+    path = str(tmp_path / "t")
+    V.create_or_replace(_df(spark, [(1, "a")]), path, n_files=1)  # v1
+    in_flight = V._write_data_files(_df(spark, [(5, "e")]), path, 1)
+    V.create_or_replace(_df(spark, [(2, "b")]), path)             # v2
+    assert V.vacuum(path, keep_last=1) == 1                       # v1's file only
+    assert all(os.path.exists(os.path.join(path, f)) for f in in_flight)
+    with open(V._current_path(path), "w") as fh:  # a hint vacuum expired
+        fh.write("1")
+    assert V.current_version(path) == 2
+    assert V._append_files(path, in_flight, "append") == 3
+    assert {r.id for r in V.read_snapshot(spark, path).collect()} == {2, 5}
 
 
 def test_no_directory_listing_on_read_path(spark, tmp_path):

@@ -571,8 +571,8 @@ co.uk
 def test_synth_full_psl_shape(spark):
     # deterministic, a superset of the vendored subset, at the real
     # list's scale, with all three structural rule classes represented;
-    # and the operator accepts it (scale probe uses it at 1M hosts —
-    # tools/psl_scale_probe.py, measured entry in SCALE.md)
+    # and the operator accepts it (measured at 1M hosts: entry in
+    # SCALE.md)
     from real_estate_project1_etl_spark.functions.psl_data import (
         DEFAULT_PSL_RULES,
         synth_full_psl,
