@@ -8933,10 +8933,10 @@ def q_documents_corpus_build_v3(spark, sf_dir):
     s0 = dom.filter(F.col("domain").isNotNull()).join(
         F.broadcast(block), "domain", "left_anti"
     )
-    from real_estate_project1_etl_spark.operators.dedup import _bind
+    from real_estate_project1_etl_spark.functions.hof import bind
 
     # token array bound once per row: the unbound lambda re-evaluated the
-    # normalize/split chain per 3-word line (see dedup._bind, round 14)
+    # normalize/split chain per 3-word line (see functions.hof.bind, round 14)
     ts = F.split(F.lower(collapse_whitespace(F.col("text"))), " ")
 
     def _lines(tt):
@@ -8949,7 +8949,7 @@ def q_documents_corpus_build_v3(spark, sf_dir):
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    lines = _bind(ts, _lines)
+    lines = bind(ts, _lines)
     layout = s0.select("doc_id", F.array_join(lines, "\n").alias("text"))
     cleaned = remove_frequent_lines(layout, min_df=3).join(
         s0.select("doc_id", "source"), "doc_id"
@@ -11017,10 +11017,10 @@ def q_boilerplate_line_removal(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    from real_estate_project1_etl_spark.operators.dedup import _bind
+    from real_estate_project1_etl_spark.functions.hof import bind
 
     # token array bound once per row: the unbound lambda re-evaluated the
-    # normalize/split chain per 3-word line (see dedup._bind, round 14)
+    # normalize/split chain per 3-word line (see functions.hof.bind, round 14)
     ts = F.split(F.lower(collapse_whitespace(F.col("text"))), " ")
 
     def _lines(tt):
@@ -11033,7 +11033,7 @@ def q_boilerplate_line_removal(spark, sf_dir):
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    lines = _bind(ts, _lines)
+    lines = bind(ts, _lines)
     layout = docs.select(
         "doc_id", F.array_join(lines, "\n").alias("text")
     )

@@ -98,8 +98,11 @@ def strip_diacritics(col: Column | str) -> Column:
 
 
 def nbsp_to_space(col: Column | str) -> Column:
-    """C2 — non-breaking space -> plain space (transform.py:63)."""
-    return F.regexp_replace(col, " ", " ")
+    """C2 — non-breaking space -> plain space (transform.py:63).  A literal
+    ``replace``: the reference's pattern has no regex metacharacter, so
+    the regex engine would only add cost."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.replace(c, F.lit("\u00a0"), F.lit(" "))
 
 
 def digits_only(col: Column | str) -> Column:
@@ -117,33 +120,40 @@ def collapse_whitespace(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def _words(col: Column | str) -> Column:
+def split_words(col: Column | str) -> Column:
+    """C10 tokenizer — the trimmed string split on whitespace runs
+    (Python ``str.split()``, transform.py:81-87)."""
     return F.split(F.trim(F.col(col) if isinstance(col, str) else col), r"\s+")
 
 
+def join_last_two(words: Column) -> Column:
+    """C10 — the last two words of a word array joined by a space, with
+    trailing commas stripped; '' when there are fewer than two words
+    (transform.py:85-91). ``rtrim(',')`` is the reference's
+    ``rstrip(',')``: it removes *all* trailing commas, not just one."""
+    return F.when(
+        F.size(words) >= 2,
+        F.rtrim(F.concat_ws(" ", F.slice(words, -2, 2)), F.lit(",")),
+    ).otherwise(F.lit(""))
+
+
+def join_all_but_last_two(words: Column) -> Column:
+    """C12 helper — a word array minus its last two words, joined by a
+    space, trailing commas stripped; '' when there are two words or fewer
+    (transform.py:95 strips the region suffix from the address with
+    ``rstrip(',')``)."""
+    return F.when(
+        F.size(words) > 2,
+        F.rtrim(F.concat_ws(" ", F.slice(words, 1, F.size(words) - 2)), F.lit(",")),
+    ).otherwise(F.lit(""))
+
+
 def last_two_words(col: Column | str) -> Column:
-    """C10 — last two whitespace-separated tokens joined by a space, with
-    trailing commas stripped; '' when fewer than two words
-    (transform.py:85-91). ``,+$`` mirrors the reference's ``rstrip(',')``,
-    which removes *all* trailing commas, not just one."""
-    w = _words(col)
-    return F.when(
-        F.size(w) >= 2,
-        F.regexp_replace(F.concat_ws(" ", F.slice(w, -2, 2)), ",+$", ""),
-    ).otherwise(F.lit(""))
-
-
-def drop_last_two_words(col: Column | str) -> Column:
-    """C12 helper — the string minus its last two words, trailing commas
-    stripped (transform.py:95 strips the region suffix from the address;
-    ``,+$`` = Python ``rstrip(',')``)."""
-    w = _words(col)
-    return F.when(
-        F.size(w) > 2,
-        F.regexp_replace(F.concat_ws(" ", F.slice(w, 1, F.size(w) - 2)), ",+$", ""),
-    ).otherwise(F.lit(""))
+    """C10 over a string: :func:`join_last_two` of its :func:`split_words`."""
+    return join_last_two(split_words(col))
 
 
 def basename(col: Column | str) -> Column:
     """C15 — last path segment (transform.py:112)."""
-    return F.element_at(F.split(col, "/"), -1)
+    c = F.col(col) if isinstance(col, str) else col
+    return F.substring_index(c, "/", -1)

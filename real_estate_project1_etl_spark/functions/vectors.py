@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .hof import bind
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
@@ -32,14 +34,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def _bind_scalar(value: Column, fn) -> Column:
-    """Evaluate ``value`` once per row and hand it to ``fn`` as a bound
-    lambda variable (see operators/dedup._bind): an outer expression
-    referenced inside a higher-order-function lambda is re-evaluated per
-    array element by the interpreted evaluator."""
-    return F.element_at(F.transform(F.array(value), fn), 1)
-
-
 def normalize(a: Column | str) -> Column:
     """Unit-normalize once upstream so similarity joins reduce to dot
     products (normalize-then-dot beats cosine-per-pair at scale).
@@ -48,7 +42,7 @@ def normalize(a: Column | str) -> Column:
     inside the transform lambda re-ran the O(dim) norm fold per element
     — O(dim^2) per vector."""
     a = F.col(a) if isinstance(a, str) else a
-    return _bind_scalar(l2_norm(a), lambda n: F.transform(a, lambda x: x / n))
+    return bind(l2_norm(a), lambda n: F.transform(a, lambda x: x / n))
 
 
 def quantize_int8(a: Column | str) -> Column:
@@ -65,7 +59,7 @@ def quantize_int8(a: Column | str) -> Column:
     )
     # scale bound once per row (round 14): unbound, the per-cell lambda
     # re-ran the O(dim) max fold per element
-    return _bind_scalar(
+    return bind(
         amax / F.lit(127.0),
         lambda scale: F.struct(
             scale.alias("scale"),

@@ -2,12 +2,19 @@
 ``clean_and_transform_data`` (reference: transform.py:62-116), re-expressed
 as one lazy chain of native Column expressions.
 
-Execution-model upgrade: the reference runs eagerly, single-threaded, whole
-file in memory, with hand-chosen predicate order (transform.py:62-103).
-Here the chain is *one logical plan*; Catalyst folds the constant regexes,
-reorders/pushes filters into the scan, and whole-stage-codegens the entire
-project+filter pipeline into a single narrow stage. The only shuffle is the
-first-wins dedup (exchange on ``link``), which AQE coalesces at runtime.
+Execution model: after the first-wins dedup (the only shuffle, an
+exchange on the raw ``link``), every normalized or derived value — the
+NBSP fix of each column, the parsed price and size, the region split of
+the address, the price per m² — is a column of a projection, computed
+once per row, and F1–F6 read those columns as ONE predicate.  The
+predicate deliberately sits inside the generator that emits the silver
+row (``inline`` of a one-row array when it holds, of NULL when it does
+not), not in a ``Filter``: Catalyst pushes a ``Filter`` down through
+every projection and inlines the expressions it reads, so six chained
+filters turned 6 input columns into 42 ``regexp_replace`` and 7 address
+splits per row.  A generator is a barrier that rule does not cross.
+All derived work stays after the dedup exchange, where it runs on every
+shuffle partition — a day-file is one scan split.
 
 Documented divergences from pandas quirks (SURVEY.md §7 "hard parts"):
 - digit-extract yields NULL on zero-digit input (reference throws).
@@ -21,16 +28,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hof import bind
 from ..functions.numeric import guarded_ratio_int, lenient_int
 from ..functions.text import (
     basename,
     digits_only,
-    drop_last_two_words,
-    last_two_words,
+    join_all_but_last_two,
+    join_last_two,
     nbsp_to_space,
+    split_words,
     strip_diacritics,
 )
-from ..schemas import CZECH_REGIONS
+from ..schemas import CZECH_REGIONS, PROPERTIES_CLEAN
 
 #: rent/sale purpose keyword lists, transcribed verbatim from the reference
 #: (transform.py:44-60; the reference re-declares the same lists mid-function
@@ -71,22 +80,35 @@ def dedup_first(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFram
     )
 
 
+def region_split(address: Column | str = "address") -> Column:
+    """C10–C12 — ``struct(region, address)`` (transform.py:85-95): an
+    address that mentions 'kraj' ends in its region, its last two words,
+    and keeps the words before them; any other address is in 'Praha' and
+    stays whole.  The word array is bound once per row, so both halves
+    read one split."""
+    a = F.col(address) if isinstance(address, str) else address
+    return F.when(
+        F.lower(a).contains("kraj"),
+        bind(
+            split_words(a),
+            lambda w: F.struct(
+                join_last_two(w).alias("region"),
+                join_all_but_last_two(w).alias("address"),
+            ),
+        ),
+    ).otherwise(F.struct(F.lit("Praha").alias("region"), a.alias("address")))
+
+
 def region_expr(address: Column | str = "address") -> Column:
     """C11 — region from address: last two words when the address mentions
     'kraj', else 'Praha' (transform.py:90)."""
-    a = F.col(address) if isinstance(address, str) else address
-    return F.when(
-        F.lower(a).contains("kraj"), last_two_words(a)
-    ).otherwise(F.lit("Praha"))
+    return region_split(address)["region"]
 
 
 def address_without_region_expr(address: Column | str = "address") -> Column:
     """C12 — strip the region suffix from addresses that carry one
     (transform.py:91)."""
-    a = F.col(address) if isinstance(address, str) else address
-    return F.when(
-        F.lower(a).contains("kraj"), drop_last_two_words(a)
-    ).otherwise(a)
+    return region_split(address)["address"]
 
 
 def clean_properties(
@@ -97,7 +119,8 @@ def clean_properties(
     streaming: bool = False,
 ) -> DataFrame:
     """Full bronze -> silver clean (transform.py:62-116), same operator
-    order, one logical plan.
+    order, one logical plan; each value is computed once per row (see the
+    module docstring).
 
     ``file_name_col`` defaults to the scan's file metadata (the reference
     back-computes it from the S3 key, transform.py:112); ``dump_ts`` defaults
@@ -109,7 +132,7 @@ def clean_properties(
 
     # P3/C15 — capture scan-time lineage BEFORE any shuffle:
     # input_file_name() is only defined on the scan partition, and the
-    # dedup window below introduces an exchange.
+    # dedup below introduces an exchange.
     out = df.withColumn(
         "file_name",
         file_name_col if file_name_col is not None else basename(F.input_file_name()),
@@ -124,40 +147,43 @@ def clean_properties(
     else:
         out = dedup_first(out, ["link"], dedup_order)  # D1
 
-    # C2 global NBSP fix across all string columns (transform.py:63)
-    for c in ("purpose", "address", "size_m2", "design", "price_czk", "link"):
-        out = out.withColumn(c, nbsp_to_space(F.col(c)))
-
     out = (
-        out.filter(~F.coalesce(F.col("price_czk").contains("EUR"), F.lit(False)))  # F1
-        .withColumn("price_czk", digits_only(F.regexp_replace("price_czk", "Kc", "")))  # C3+C4
-        .filter(F.col("price_czk") >= 500)  # F2
-        .filter(~(F.col("purpose").rlike(rent_rx) & (F.col("price_czk") <= 1000)))  # F3
-        .filter(~(F.col("purpose").rlike(sale_rx) & (F.col("price_czk") <= 20000)))  # F4
+        out.select(  # C2 global NBSP fix across all string columns (transform.py:63)
+            *[nbsp_to_space(c).alias(c) for c in
+              ("purpose", "address", "size_m2", "design", "price_czk", "link")],
+            "file_name",
+        )
+        # F1 reads the fixed price text, before C3+C4 replace it
+        .withColumn("_eur", F.coalesce(F.col("price_czk").contains("EUR"), F.lit(False)))
+        .withColumn(
+            "price_czk",
+            digits_only(F.replace(F.col("price_czk"), F.lit("Kc"), F.lit(""))),  # C3+C4
+        )
         .withColumn(
             "size_m2",
-            lenient_int(F.regexp_replace("size_m2", "m2", "")),  # C3+C5+C6
+            lenient_int(F.replace(F.col("size_m2"), F.lit("m2"), F.lit(""))),  # C3+C5+C6
         )
-        .withColumn("region", region_expr("address"))  # C10+C11
-        .withColumn("address", address_without_region_expr("address"))  # C12
-        .filter(F.col("region").isin(CZECH_REGIONS))  # F5 (broadcast IN-list)
-        .withColumn(
-            "price_per_m2", guarded_ratio_int("price_czk", "size_m2")  # C7-C9
-        )
-        .filter(  # F6 outlier
-            ~(
-                F.col("purpose").contains("Prodej pozemku")
-                & (F.col("price_per_m2") > 80000)
-            )
-            | F.col("price_per_m2").isNull()
-        )
+        .withColumn("_region", region_split("address"))  # C10-C12
+        .withColumn("region", F.col("_region.region"))
+        .withColumn("address", F.col("_region.address"))
+        .withColumn("price_per_m2", guarded_ratio_int("price_czk", "size_m2"))  # C7-C9
         .withColumn("dump_date", dump_ts if dump_ts is not None else F.current_timestamp())  # P3/C14
-        .select(  # P2 final projection, exact silver order (transform.py:115-116)
-            "purpose", "address", "region", "size_m2", "design", "price_czk",
-            "price_per_m2", "link", "dump_date", "file_name",
-        )
     )
-    return out
+    purpose, price, ppm = F.col("purpose"), F.col("price_czk"), F.col("price_per_m2")
+    keep = (
+        ~F.col("_eur")  # F1
+        & (price >= 500)  # F2
+        # F3, F4: the price bound first, so most rows skip the regex
+        & ~((price <= 1000) & purpose.rlike(rent_rx))  # F3
+        & ~((price <= 20000) & purpose.rlike(sale_rx))  # F4
+        & F.col("region").isin(CZECH_REGIONS)  # F5
+        & (~(purpose.contains("Prodej pozemku") & (ppm > 80000)) | ppm.isNull())  # F6 outlier
+    )
+    # P2 final projection in the reference's exact order (transform.py:
+    # 115-116): one silver row where ``keep`` holds, none where it is false
+    # or NULL — a Filter here would be pushed down and inlined
+    silver = F.struct(*PROPERTIES_CLEAN.fieldNames())
+    return out.select(F.inline(F.when(keep, F.array(silver))))
 
 
 def scraped_rows_to_bronze(df: DataFrame) -> DataFrame:

@@ -262,13 +262,14 @@ def heavy_hitter_ngrams(
     top-k sketch guarantees; raise ``capacity`` to push the exact
     frontier out.
     """
-    from .dedup import _bind, word_ngrams
+    from ..functions.hof import bind
+    from .dedup import word_ngrams
 
     w = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # split bound once per row; when size >= n every window is full, so
     # word_ngrams' gram list equals the historical transform(sequence)
     # construction exactly (which re-evaluated the split per gram)
-    grams = _bind(
+    grams = bind(
         w,
         lambda ww: F.when(F.size(ww) >= n, word_ngrams(ww, n)).otherwise(
             F.expr("cast(array() as array<string>)")
@@ -316,13 +317,13 @@ def bigram_coverage(
     37.6 s -> see SCALE.md.  Returns (doc_id, n_bigrams, n_covered,
     coverage).
     """
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     w = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # token-hash array bound once per row (round 14): the unbound form
     # referenced it twice (two shifted slices), re-running the per-token
     # xxhash pass per reference in the interpreted evaluator
-    keys = _bind(
+    keys = bind(
         F.transform(w, lambda x: F.xxhash64(x)),
         lambda hs: F.zip_with(
             F.slice(hs, 1, F.greatest(F.size(hs) - 1, F.lit(0))),
@@ -561,7 +562,7 @@ def bigram_lm_scores(
     """
     from .util import ensure_parallelism
 
-    from ..operators.dedup import _bind
+    from ..functions.hof import bind
 
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # bigram build as arrays_zip of two shifted slices — a PLAIN
@@ -572,7 +573,7 @@ def bigram_lm_scores(
     # The word array is BOUND once (round 14): the un-bound form
     # references ws three times (size + two slices) and the interpreted
     # evaluator re-runs the lower/collapse/split chain per reference.
-    big = _bind(
+    big = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))).alias("w1"),
@@ -724,13 +725,13 @@ def trigram_lm_scores(
             "trigram_lm_scores: min_count3/min_count2 must be >= 1, got "
             f"{min_count3!r}/{min_count2!r}"
         )
-    from ..operators.dedup import _bind
+    from ..functions.hof import bind
 
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # word arrays bound once (round 14): the un-bound zips reference ws
     # 4x / 3x and the interpreted evaluator re-runs the normalize/split
-    # chain per reference — see dedup._bind
-    tri = _bind(
+    # chain per reference — see functions.hof.bind
+    tri = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 2, F.lit(0))).alias("w1"),
@@ -738,7 +739,7 @@ def trigram_lm_scores(
             F.slice(w, 3, F.greatest(F.size(w) - 2, F.lit(0))).alias("w3"),
         ),
     )
-    big = _bind(
+    big = bind(
         ws,
         lambda w: F.arrays_zip(
             F.slice(w, 1, F.greatest(F.size(w) - 1, F.lit(0))).alias("b1"),

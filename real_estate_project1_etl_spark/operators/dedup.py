@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hof import bind
 from ..functions.text import collapse_whitespace
 from .util import ensure_parallelism
 
@@ -48,38 +49,18 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(digests, id_col, "left_semi")
 
 
-def _bind(value: Column, fn) -> Column:
-    """Evaluate ``value`` ONCE per row and hand it to ``fn`` as a bound
-    lambda variable.
-
-    Interpreted higher-order functions re-evaluate any OUTER expression
-    their lambda references once per array element — a lambda like
-    ``i -> concat_ws(' ', slice(w, i, n))`` re-runs the whole
-    lower/collapse/split chain that produces ``w`` for every gram,
-    turning an O(words) projection into O(words^2) per document
-    (measured: the minhash signature build over sf0.1 documents dropped
-    3.7 -> 0.6 s when the re-evaluation was removed; the winnowing
-    chain, which stacked two such lambdas, dropped ~50x).  Lambda
-    VARIABLES, by contrast, are evaluated values — so wrapping the
-    expensive expression in a single-element array and binding it via
-    ``transform`` makes the inner lambda reference a value, with
-    construction semantics otherwise IDENTICAL to the unbound form.
-    """
-    return F.element_at(F.transform(F.array(value), fn), 1)
-
-
 def word_ngrams(words: Column, n: int) -> Column:
     """Positional word n-grams of a word array, built from ``n`` shifted
     slices zipped together so the lambda references only lambda
-    variables (see :func:`_bind` — the unbound ``slice(w, i, n)`` form
+    variables (see ``functions.hof.bind`` — the unbound ``slice(w, i, n)`` form
     re-evaluates ``w`` per gram).  Clamps exactly like
     ``concat_ws(' ', slice(w, i, n))``: documents shorter than ``n``
     words yield ONE gram joining all their words (``arrays_zip`` pads
     the short shifted slices with NULL and ``concat_ws`` skips NULLs);
-    a NULL word array yields a single empty-string gram (legacy
-    ``concat_ws(NULL slice)`` behavior) — both proven value-identical
-    to the historical form on the full corpus and the edge battery
-    (tests/test_linkage_fingerprint.py)."""
+    a NULL or empty word array yields a single empty-string gram (legacy
+    ``concat_ws(NULL or empty slice)`` behavior) — all proven
+    value-identical to the historical form on the full corpus and the
+    edge battery (tests/test_linkage_fingerprint.py)."""
     def build(ww: Column) -> Column:
         m = F.greatest(F.size(ww) - (n - 1), F.lit(1))
         zipped = F.arrays_zip(
@@ -88,23 +69,24 @@ def word_ngrams(words: Column, n: int) -> Column:
         grams = F.transform(
             zipped, lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(n)])
         )
-        return F.when(ww.isNotNull(), grams).otherwise(F.array(F.lit("")))
+        # size(NULL) is -1 or NULL, so this one guard covers both cases
+        return F.when(F.size(ww) > 0, grams).otherwise(F.array(F.lit("")))
 
-    # the word array feeds n slices + size + the NULL guard — bind it so
+    # the word array feeds n slices + size + the empty guard — bind it so
     # the producing split/normalize chain evaluates once per row, not
     # n+2 times
-    return _bind(words, build)
+    return bind(words, build)
 
 
 def char_ngrams(text: Column | str, n: int = 3) -> Column:
     """Distinct character n-grams as an array — native higher-order fns.
-    The normalized text is bound once per row (:func:`_bind`); the
+    The normalized text is bound once per row (``functions.hof.bind``); the
     per-gram ``substr`` then copies ``n`` chars instead of re-running
     the lower/collapse chain per gram."""
     t = F.col(text) if isinstance(text, str) else text
     t = F.lower(collapse_whitespace(t))
     return F.array_distinct(
-        _bind(
+        bind(
             t,
             lambda tt: F.transform(
                 F.sequence(
@@ -533,7 +515,7 @@ def simhash64(text: Column | str, ngram: int = 2, bits: int = 64) -> Column:
             )
         return out
 
-    return _bind(F.transform(sh, lambda s: F.xxhash64(s)), _votes)
+    return bind(F.transform(sh, lambda s: F.xxhash64(s)), _votes)
 
 
 def simhash_signatures(

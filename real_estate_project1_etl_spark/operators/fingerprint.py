@@ -81,7 +81,7 @@ def winnow(hashes: Column, w: int = 4) -> Column:
     degenerate-window rule). ``slice`` clamps at the array end in both
     Spark and DuckDB, so the mirror is exact.
     """
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     # w shifted slices zipped, minimum per window via least() — the
     # lambda references only lambda variables, and the hash array
@@ -105,7 +105,7 @@ def winnow(hashes: Column, w: int = 4) -> Column:
             zipped, lambda s: F.least(*[s[f"h{i}"] for i in range(w)])
         )
 
-    return F.array_distinct(_bind(hashes, build))
+    return F.array_distinct(bind(hashes, build))
 
 
 def winnowing_fingerprints(

@@ -554,7 +554,7 @@ def word_cooccurrence_edges(
     exchange is the final distinct on the vocabulary-pair table; the
     corpus text itself never shuffles.
     """
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     t = F.col(text_col)
     ws = F.split(
@@ -564,7 +564,7 @@ def word_cooccurrence_edges(
     # word array bound once per row (round 14): the unbound form
     # referenced ws 3x per window offset (size + two slices) and the
     # interpreted evaluator re-ran the normalize/split chain per
-    # reference — see dedup._bind
+    # reference — see functions.hof.bind
     def _pairs(w):
         pair_arrays = []
         for d in range(1, window + 1):
@@ -580,7 +580,7 @@ def word_cooccurrence_edges(
             )
         return F.concat(*pair_arrays)
 
-    pairs = df.select(F.explode(_bind(ws, _pairs)).alias("p")).select(
+    pairs = df.select(F.explode(bind(ws, _pairs)).alias("p")).select(
         "p.a", "p.b"
     )
     return pairs.filter(F.col("a") != F.col("b")).distinct()

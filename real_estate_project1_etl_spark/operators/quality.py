@@ -1290,13 +1290,13 @@ def _hashed_gram_counts(
     docs = ensure_parallelism(
         docs.select(*keep).filter(F.col(id_col).isNotNull())
     )
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # word array bound once (round 14): the un-bound form references ws
     # three times (itself + two slices) and the interpreted evaluator
-    # re-runs the normalize/split chain per reference — see dedup._bind
-    allg = _bind(
+    # re-runs the normalize/split chain per reference — see functions.hof.bind
+    allg = bind(
         ws,
         lambda w: F.concat(
             w,
@@ -1420,13 +1420,16 @@ def dsir_importance_weights(
     # and c_t is the flagged slice's aggregate — proven by the shared
     # oracle (dsir queries ALL MATCH at sf0.001/sf0.01/sf0.1) and the
     # fused-vs-generic equality test.
+    flag = "_is_t"
+    while flag in raw.columns:  # never overwrite a caller's column
+        flag = "_" + flag
     feats = _hashed_gram_counts(
-        raw.withColumn("_is_t", target_pred),
-        dim, text_col, id_col, hash_fn, flag_col="_is_t",
+        raw.withColumn(flag, target_pred),
+        dim, text_col, id_col, hash_fn, flag_col=flag,
     ).localCheckpoint(eager=True)
     c_r = feats.groupBy("feature_id").agg(F.sum("n").alias("c_r"))
     c_t = (
-        feats.filter(F.col("_is_t"))
+        feats.filter(F.col(flag))
         .groupBy("feature_id")
         .agg(F.sum("n").alias("c_t"))
     )

@@ -763,13 +763,13 @@ def pq_encode(
     Arrow/numpy batch like :func:`brute_force_topk_pandas`, same
     results). The corpus never shuffles.
     """
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     row, m, sub, _ = _pq_collapse(codebooks)
     # the double-cast vector is BOUND once per row (round 14): unbound,
     # the per-centroid lambda re-ran the O(dim) float->double cast once
     # per (subspace, code) pair in the interpreted evaluator
-    codes = _bind(
+    codes = bind(
         F.col(vec_col).cast("array<double>"),
         lambda v: F.transform(
             F.sequence(F.lit(0), F.lit(m - 1)),
@@ -845,11 +845,11 @@ def pq_topk(
         enc = pq_encode(corpus, codebooks, vec_col, id_col).withColumnRenamed(
             id_col, "neighbor_id"
         )
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     # query vector bound once (round 14): unbound, the per-centroid
     # lambda re-ran the O(dim) cast per LUT cell
-    lut = _bind(
+    lut = bind(
         F.col(vec_col).cast("array<double>"),
         lambda qv: F.flatten(
             F.transform(
@@ -947,9 +947,9 @@ def ivfpq_encode(
             ).alias("_cents")
         )
     cv = F.col(vec_col).cast("array<double>")
-    from .dedup import _bind
+    from ..functions.hof import bind
 
-    lid = _bind(
+    lid = bind(
         cv,
         lambda v: -F.array_max(
             F.transform(
@@ -982,8 +982,8 @@ def ivfpq_encode(
     )
     # bind the residual: CollapseProject can inline the _res zip_with
     # into this expression, where an unbound reference would re-run it
-    # once per (subspace, code) pair — _bind makes that collapse harmless
-    codes = _bind(
+    # once per (subspace, code) pair — bind makes that collapse harmless
+    codes = bind(
         F.col("_res"),
         lambda res: F.transform(
             F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1135,7 +1135,7 @@ def ivfpq_topk(
             F.col("codes"),
         )
 
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     qv = F.col(vec_col).cast("array<double>")
     q0 = (
@@ -1147,7 +1147,7 @@ def ivfpq_topk(
         "query_id",
         F.col(vec_col),
         F.explode(
-            _bind(
+            bind(
                 qv,
                 lambda v: F.transform(
                     # list count from the broadcast row, not a count() job
@@ -1177,7 +1177,7 @@ def ivfpq_topk(
             # per probed cell: residual query + its m x n_codes LUT
             # residual BOUND once per (query, probed cell): unbound, the
             # per-code lambda re-ran the O(dim) zip_with per LUT cell
-            _bind(
+            bind(
                 F.zip_with(
                     qv,
                     F.element_at(F.col("_cents"), F.col("list_id") + 1),

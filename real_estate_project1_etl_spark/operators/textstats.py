@@ -37,12 +37,12 @@ def _rc(col: Column, pattern: str) -> Column:
 
 
 def whitespace_token_count(text: Column | str) -> Column:
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     t = F.col(text) if isinstance(text, str) else text
     # normalized text bound once (round 14): the two references (length
     # guard + split) each re-ran the collapse regex per row
-    return _bind(
+    return bind(
         collapse_whitespace(t),
         lambda tt: F.when(F.length(tt) == 0, F.lit(0)).otherwise(
             F.size(F.split(tt, " "))
@@ -255,7 +255,8 @@ def repetition_ratio(text: Column | str, n: int = 3) -> Column:
     """Gopher-style repetition signal: 1 - distinct/total word n-grams.
     High values flag boilerplate/spam for quality filtering. All
     higher-order array functions — no shuffle, no Python."""
-    from .dedup import _bind, word_ngrams
+    from ..functions.hof import bind
+    from .dedup import word_ngrams
 
     t = F.col(text) if isinstance(text, str) else text
     w = F.split(F.lower(collapse_whitespace(t)), " ")
@@ -271,7 +272,7 @@ def repetition_ratio(text: Column | str, n: int = 3) -> Column:
             F.size(F.array_distinct(word_ngrams(ww, n))).alias("ndist"),
         )
 
-    s = _bind(w, build)
+    s = bind(w, build)
     return F.when(
         s["total"] > 0,
         F.lit(1.0) - s["ndist"] / s["total"],
@@ -358,7 +359,7 @@ def token_chunk_documents(
 
     Returns (id, chunk_id, chunk, n_tokens); empty documents yield no rows.
     """
-    from .dedup import _bind
+    from ..functions.hof import bind
 
     tpc = tokens_per_chunk
 
@@ -385,7 +386,7 @@ def token_chunk_documents(
             ),
         )
 
-    chunks = _bind(
+    chunks = bind(
         F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")),
         build,
     )
@@ -448,12 +449,13 @@ def hashing_trick_features(tokens: Column, dim: int = 16) -> Column:
     end-to-end.  All JVM higher-order functions; one pass over tokens
     (hash hoisted out of the per-bucket counts).
     """
-    from .dedup import _bind, shingle_hash_expr
+    from ..functions.hof import bind
+    from .dedup import shingle_hash_expr
 
     # the hashed-token array is BOUND once per row (round 14): an
     # unbound reference inside the per-bucket lambda re-hashed every
     # token once per bucket (dim x) in the interpreted evaluator
-    return _bind(
+    return bind(
         F.transform(
             tokens,
             lambda t: F.pmod(shingle_hash_expr(t, "md5_60"), F.lit(dim)),

@@ -336,6 +336,7 @@ def test_gram_builders_match_legacy_unbound_construction(spark):
     from real_estate_project1_etl_spark.operators.dedup import (
         char_ngrams,
         shingle_hash_expr,
+        word_ngrams,
         word_shingles,
     )
     from real_estate_project1_etl_spark.operators.fingerprint import (
@@ -412,6 +413,19 @@ def test_gram_builders_match_legacy_unbound_construction(spark):
         for r in rows:
             assert r.ws_new == r.ws_old, (n, r.doc_id, r.ws_new, r.ws_old)
             assert r.cg_new == r.cg_old, (n, r.doc_id, r.cg_new, r.cg_old)
+    # word_ngrams itself over a token array that CAN be empty (a filtered
+    # split, as token_chunk_documents builds): NULL and [] both yield the
+    # legacy single empty gram
+    toks = F.filter(F.split(F.trim(F.col("text")), " "), lambda x: x != "")
+    for n in (2, 3):
+        legacy = F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+        for r in df.select(
+            "doc_id", word_ngrams(toks, n).alias("new"), legacy.alias("old")
+        ).collect():
+            assert r.new == r.old, (n, r.doc_id, r.new, r.old)
     rows = df.select(
         "doc_id",
         kgram_hash_array("text", 3).alias("kh_new"),

@@ -1451,6 +1451,18 @@ def test_dsir_fused_slice_path_equals_generic(spark):
         }
         assert fused == generic, (pred_lang, fused, generic)
 
+    # the fused path's internal target flag must not overwrite a caller's
+    # column of the same name (here: the text column itself)
+    named = df.withColumnRenamed("text", "_is_t")
+    pred = F.col("lang") == "en"
+    generic = dsir_importance_weights(
+        named, named.filter(pred), dim=64, scale=1000, text_col="_is_t"
+    )
+    fused = dsir_importance_weights(
+        named, target_pred=pred, dim=64, scale=1000, text_col="_is_t"
+    )
+    assert sorted(fused.collect()) == sorted(generic.collect())
+
     import pytest
 
     with pytest.raises(ValueError, match="exactly one"):

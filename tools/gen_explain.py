@@ -1,11 +1,16 @@
 #!/usr/bin/env python
 """Regenerate EXPLAIN.md — formatted physical plans for the headline
 queries, so plan quality (pushdown, pruning, broadcast, codegen) is
-reviewable without running anything. Run: python tools/gen_explain.py"""
+reviewable without running anything.
+
+Run: ``python tools/gen_explain.py`` rewrites the whole file;
+``python tools/gen_explain.py NAME [NAME ...]`` rewrites only the named
+queries' existing sections, leaving every other plan as it is."""
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -156,14 +161,14 @@ def bench_headline() -> list[str]:
     return list(bench.HEADLINE)
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     spark = get_spark(
         "explain", cpus=4, shuffle_partitions=4,
         extra_conf={"spark.sql.adaptive.enabled": "false"},  # show static plan
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
-    show = list(SHOW) + [n for n in bench_headline() if n not in SHOW]
+    show = names or list(SHOW) + [n for n in bench_headline() if n not in SHOW]
     out = [
         "# EXPLAIN — formatted physical plans (AQE off for readability)\n",
         "Generated by `tools/gen_explain.py`. Things to check: filters in",
@@ -179,10 +184,29 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"\n## {name}\n\n```\n{plan}\n```")
+    if names:
+        _replace_sections(names, out[-len(names):])
+        return
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote EXPLAIN.md")
 
 
+def _replace_sections(names: list[str], sections: list[str]) -> None:
+    """Swap the named queries' sections of EXPLAIN.md for ``sections``; a
+    section runs from its heading to the next one (or the end)."""
+    path = os.path.join(REPO, "EXPLAIN.md")
+    with open(path) as f:
+        text = f.read()
+    for name, body in zip(names, sections):
+        pat = re.compile(rf"\n## {re.escape(name)}\n.*?(?=\n## |\Z)", re.S)
+        if not pat.search(text):
+            raise SystemExit(f"EXPLAIN.md has no section {name!r}")
+        text = pat.sub(lambda _: body + "\n", text, count=1)
+    with open(path, "w") as f:
+        f.write(text)
+    print(f"rewrote {len(names)} section(s) of EXPLAIN.md")
+
+
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
