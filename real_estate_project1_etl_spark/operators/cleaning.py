@@ -3,7 +3,7 @@
 as one lazy chain of native Column expressions.
 
 Execution model: after the first-wins dedup (the only shuffle, an
-exchange on the raw ``link``), every normalized or derived value — the
+exchange on ``link, file_name``), every normalized or derived value — the
 NBSP fix of each column, the parsed price and size, the region split of
 the address, the price per m² — is a column of a projection, computed
 once per row, and F1–F6 read those columns as ONE predicate.  The
@@ -18,9 +18,14 @@ shuffle partition — a day-file is one scan split.
 
 Documented divergences from pandas quirks (SURVEY.md §7 "hard parts"):
 - digit-extract yields NULL on zero-digit input (reference throws).
-- dedup is *deterministic first-by-link-ordered* via row_number (pandas
-  keeps first-in-file-order; Spark has no implicit order, so we order by a
-  caller-supplied tiebreak column, defaulting to the natural all-column sort).
+- dedup keeps the first row of each ``(link, file_name)`` by a
+  caller-supplied order (pandas keeps the first in file order; Spark has
+  no implicit row order).  The streaming entry points pass the file order
+  itself, ``(file_block_start, monotonically_increasing_id())``, so they
+  keep the reference's copy (``streaming/file_pipeline.py``); the default
+  order ``link`` leaves the choice among copies to the engine.  A batch
+  over several files dedups each file on its own, as the reference does
+  when it runs once per file.
 """
 
 from __future__ import annotations
@@ -116,7 +121,6 @@ def clean_properties(
     dedup_order: list[str] | None = None,
     file_name_col: Column | None = None,
     dump_ts: Column | None = None,
-    streaming: bool = False,
 ) -> DataFrame:
     """Full bronze -> silver clean (transform.py:62-116), same operator
     order, one logical plan; each value is computed once per row (see the
@@ -125,6 +129,8 @@ def clean_properties(
     ``file_name_col`` defaults to the scan's file metadata (the reference
     back-computes it from the S3 key, transform.py:112); ``dump_ts`` defaults
     to ``current_timestamp()`` — inject a literal for deterministic tests.
+    D1 keeps, of the rows sharing ``(link, file_name)``, the first by
+    ``dedup_order``.
     """
     dedup_order = dedup_order or ["link"]
     rent_rx = "|".join(RENT_KEYWORDS)
@@ -137,15 +143,10 @@ def clean_properties(
         "file_name",
         file_name_col if file_name_col is not None else basename(F.input_file_name()),
     )
-    if streaming:
-        # D1, streaming form: stateful dedup keyed (link, file_name) —
-        # row_number windows aren't supported on streams. Scoping the key
-        # to the source file reproduces the reference's *within-batch*
-        # dedup exactly: the same listing may legitimately reappear in the
-        # next day's file (transform.py:62 dedups one file at a time).
-        out = out.dropDuplicates(["link", "file_name"])
-    else:
-        out = dedup_first(out, ["link"], dedup_order)  # D1
+    # D1 — scoped to the source file: the reference dedups one file at a
+    # time (transform.py:62), and a listing may legitimately reappear in
+    # the next day's file
+    out = dedup_first(out, ["link", "file_name"], dedup_order)
 
     out = (
         out.select(  # C2 global NBSP fix across all string columns (transform.py:63)

@@ -153,6 +153,11 @@ def winnowing_near_duplicates(
     explode the join); the pair count is one more agg on the (a, b) key.
     No similarity verify step here — compose with ``ngram_jaccard`` or
     minhash verify when an exact score is needed.
+
+    Eager at construction: the result is an eager ``localCheckpoint``, so
+    calling this function runs the whole pair job before it returns, and
+    the checkpoint blocks stay cached for the session.  A caller that only
+    wants the plan (``EXPLAIN``) or a streaming form pays that job too.
     """
     from pyspark import StorageLevel
 

@@ -1282,16 +1282,15 @@ def _hashed_gram_counts(
     sits in the shared prefix for stage reuse, for the reasons
     documented at ``corpus.bigram_lm_scores``.
     """
+    from ..functions.hof import bind
     from ..functions.text import collapse_whitespace
     from .dedup import shingle_hash_expr
     from .util import ensure_parallelism
 
-    keep = [id_col, text_col] + ([flag_col] if flag_col else [])
+    key = [id_col] + ([flag_col] if flag_col else [])
     docs = ensure_parallelism(
-        docs.select(*keep).filter(F.col(id_col).isNotNull())
+        docs.select(*key, text_col).filter(F.col(id_col).isNotNull())
     )
-    from ..functions.hof import bind
-
     ws = F.split(F.lower(collapse_whitespace(F.col(text_col))), " ")
     # word array bound once (round 14): the un-bound form references ws
     # three times (itself + two slices) and the interpreted evaluator
@@ -1307,8 +1306,7 @@ def _hashed_gram_counts(
             ),
         ),
     )
-    gcols = [F.col(id_col)] + ([F.col(flag_col)] if flag_col else [])
-    grams = docs.select(*gcols, F.explode(allg).alias("g"))
+    grams = docs.select(*key, F.explode(allg).alias("g"))
     # bucket id: for md5_60 with a power-of-two dim, the low bits of the
     # 60-bit value only depend on the LOW hex digits — convert just
     # ceil(log16(dim)) chars instead of all 15 and pmod (value-identical
@@ -1326,7 +1324,7 @@ def _hashed_gram_counts(
     else:
         fid = F.pmod(shingle_hash_expr(F.col("g"), hash_fn), F.lit(dim))
     return (
-        grams.select(*gcols, fid.alias("feature_id"))
+        grams.select(*key, fid.alias("feature_id"))
         # semantically a no-op (pmod of md5/xxhash of a non-null string is
         # never NULL) but load-bearing for stage reuse: downstream joins
         # push isnotnull(feature_id) into SOME consumers' subtrees and not
@@ -1337,7 +1335,7 @@ def _hashed_gram_counts(
         # every consumer sees ONE identical aggregate subtree
         # (ReuseExchange) — the corpus.bigram_lm_scores lesson.
         .filter(F.col("feature_id").isNotNull())
-        .groupBy(*([id_col] + ([flag_col] if flag_col else [])), "feature_id")
+        .groupBy(*key, "feature_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

@@ -65,64 +65,16 @@ def running_user_stats(events: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
+# streaming record highs (stream twin of a running-max window)
 # --------------------------------------------------------------------------
 
 RECORD_HIGH_SCHEMA = "user_id long, event_id long, value double"
 
 
-def _record_high_processor():
-    """Build the StatefulProcessor lazily so importing this module never
-    requires the streaming-state runtime."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RecordHigh(StatefulProcessor):
-        """Emit an event only when it sets a new per-user maximum value.
-
-        ValueState holds one double per user — O(1) state per key forever,
-        the cheapest possible stateful operator. Emission is data-dependent
-        (quiet keys emit nothing), which windowed aggregations cannot
-        express; this is the change-detection shape (alerts, record
-        tracking, threshold crossings).
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._max = handle.getValueState("max_value", "m double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._max.get()[0] if self._max.exists() else None
-            out_e, out_v = [], []
-            for pdf in rows:
-                # deterministic within-batch order: event time, then id
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for eid, v in zip(pdf["event_id"], pdf["value"]):
-                    if cur is None or v > cur:
-                        cur = v
-                        out_e.append(eid)
-                        out_v.append(v)
-            if cur is not None:
-                self._max.update((float(cur),))
-            if out_e:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(out_e),
-                        "event_id": out_e,
-                        "value": out_v,
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return RecordHigh()
-
-
 def _rh_update(key, pdfs, state: GroupState):
-    """applyInPandasWithState twin of the RecordHigh processor."""
+    """Emit an event only when it sets a new per-user maximum value:
+    one double of state per user, and quiet keys emit nothing (the
+    change-detection shape windowed aggregations cannot express)."""
     import pandas as pd
 
     cur = state.get[0] if state.exists else None
@@ -142,26 +94,12 @@ def _rh_update(key, pdfs, state: GroupState):
         )
 
 
-def _tws_runtime_available() -> bool:
-    """transformWithStateInPandas needs the protobuf state protocol; gate
-    on it so environments without protobuf fall back gracefully."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def record_high_events(events: DataFrame) -> DataFrame:
     """Per-user record-high detection (an event emits iff its value
     exceeds every earlier value of that user; order = (ts, event_id)).
 
-    Streaming prefers ``transformWithStateInPandas`` (Spark 4
-    arbitrary-state API, ValueState per key); where its protobuf runtime
-    is unavailable it runs the semantically identical
-    ``applyInPandasWithState`` form. Batch DataFrames take the window
-    fallback."""
+    Streams run ``applyInPandasWithState`` (:func:`_rh_update`); batch
+    DataFrames take the window fallback."""
     if not events.isStreaming:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
@@ -178,13 +116,6 @@ def record_high_events(events: DataFrame) -> DataFrame:
             .select("user_id", "event_id", "value")
         )
     keyed = events.select("user_id", "event_id", "ts", "value").groupBy("user_id")
-    if _tws_runtime_available():
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=_record_high_processor(),
-            outputStructType=RECORD_HIGH_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
     return keyed.applyInPandasWithState(
         _rh_update,
         outputStructType=RECORD_HIGH_SCHEMA,
@@ -715,54 +646,9 @@ def read_admission_state(spark, checkpoint: str) -> DataFrame:
 CHANGE_FEED_SCHEMA = "doc_id long, seq long, status string, digest string"
 
 
-def _change_feed_processor():
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ChangeFeed(StatefulProcessor):
-        """Emit (added | changed) events per document as recrawl updates
-        stream in; unchanged recrawls emit NOTHING (the point of a change
-        feed — downstream incremental dedup re-mines only real deltas).
-        ValueState holds one digest per doc — O(1) per key forever."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_digest", "d string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._last.get()[0] if self._last.exists() else None
-            out_s, out_st, out_d = [], [], []
-            for pdf in rows:
-                pdf = pdf.sort_values("seq")
-                for seq, dg in zip(pdf["seq"], pdf["digest"]):
-                    if cur is None:
-                        out_s.append(int(seq)); out_st.append("added"); out_d.append(dg)
-                        cur = dg
-                    elif dg != cur:
-                        out_s.append(int(seq)); out_st.append("changed"); out_d.append(dg)
-                        cur = dg
-            if cur is not None:
-                self._last.update((cur,))
-            if out_s:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [key[0]] * len(out_s),
-                        "seq": out_s,
-                        "status": out_st,
-                        "digest": out_d,
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return ChangeFeed()
-
-
 def _cf_update(key, pdfs, state: GroupState):
-    """applyInPandasWithState twin of the ChangeFeed processor."""
+    """One digest of state per doc: emit ``added`` on the first
+    sighting, ``changed`` when the digest differs from the last one."""
     import pandas as pd
 
     cur = state.get[0] if state.exists else None
@@ -801,9 +687,9 @@ def content_change_feed(docs: DataFrame) -> DataFrame:
     sentinel '<NULL>' so a nulled-out recrawl reports ``changed``, not
     an error.
 
-    Stream path: transformWithStateInPandas (ValueState, one digest per
-    doc) with the applyInPandasWithState fallback; batch DataFrames take
-    the lag-window twin (same emissions, oracle-checkable).
+    Stream path: applyInPandasWithState (one digest per doc); batch
+    DataFrames take the lag-window twin (same emissions,
+    oracle-checkable).
     """
     from pyspark.sql import functions as F
 
@@ -830,13 +716,6 @@ def content_change_feed(docs: DataFrame) -> DataFrame:
             )
         )
     keyed = digested.groupBy("doc_id")
-    if _tws_runtime_available():
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=_change_feed_processor(),
-            outputStructType=CHANGE_FEED_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
     return keyed.applyInPandasWithState(
         _cf_update,
         outputStructType=CHANGE_FEED_SCHEMA,

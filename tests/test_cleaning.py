@@ -143,10 +143,13 @@ EDGE_EXPECTED = {
 
 @pytest.fixture(scope="module")
 def edge_runs(spark, tmp_path_factory):
-    """The edge battery through both forms of the chain, read from one TSV
-    day-file: ``{form: (silver rows, executed plan text)}``.  One
-    AvailableNow pass serves the streaming form."""
-    from real_estate_project1_etl_spark.operators.cleaning import clean_properties
+    """The edge battery through the batch chain and through
+    ``start_foreach_batch_load``, read from one TSV day-file:
+    ``{form: (silver rows, executed plan text)}``.  One AvailableNow pass
+    serves the stream form; its sink collects the batch it receives."""
+    from real_estate_project1_etl_spark.streaming.file_pipeline import (
+        start_foreach_batch_load,
+    )
 
     root = tmp_path_factory.mktemp("edge")
     inbox = root / "inbox"
@@ -155,32 +158,28 @@ def edge_runs(spark, tmp_path_factory):
         fh.write("\t".join(PROPERTIES_RAW.fieldNames()) + "\n")
         for r in EDGE_ROWS:
             fh.write("\t".join("" if v is None else v for v in r) + "\n")
-    dump_ts = F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-
-    def reader(r):
-        return r.schema(PROPERTIES_RAW).option("sep", "\t").option("header", True)
 
     batch = clean_properties(
-        reader(spark.read).csv(str(inbox)), dedup_order=["price_czk"], dump_ts=dump_ts
+        spark.read.schema(PROPERTIES_RAW).option("sep", "\t").option("header", True)
+        .csv(str(inbox)),
+        dedup_order=["price_czk"], dump_ts=F.to_timestamp(F.lit("2026-01-01 00:00:00")),
     )
-    # the plan text before the run: once AQE has finished, it holds both
-    # its initial and its final plan
-    plan = batch._jdf.queryExecution().executedPlan().toString()
+
+    def plan_of(df):
+        # the plan text before the run: once AQE has finished, it holds
+        # both its initial and its final plan
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    plan = plan_of(batch)
     runs = {"batch": (batch.collect(), plan)}
-    q = (
-        clean_properties(reader(spark.readStream).csv(str(inbox)),
-                         streaming=True, dump_ts=dump_ts)
-        .writeStream.format("memory").queryName("edge_battery")
-        .option("checkpointLocation", str(root / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    try:
-        assert q.awaitTermination(120), "edge-battery stream did not finish"
-        runs["stream"] = (spark.table("edge_battery").collect(),
-                          q._jsq.streamingQuery().lastExecution().executedPlan().toString())
-    finally:
-        q.stop()
-        spark.catalog.dropTempView("edge_battery")
+
+    def sink(df, batch_id):
+        plan = plan_of(df)
+        runs["stream"] = (df.collect(), plan)
+
+    q = start_foreach_batch_load(spark, str(inbox), str(root / "ckpt"), sink)
+    assert q.awaitTermination(120), "edge-battery stream did not finish"
+    assert q.exception() is None, q.exception()
     return runs
 
 
@@ -190,12 +189,12 @@ def test_edge_battery(edge_runs, form):
     got = {tuple(r)[:8] for r in rows}
     assert len(rows) == len(got)
     assert {r["file_name"] for r in rows} == {"edge.tsv"}
-    assert {r["dump_date"] for r in rows} == {datetime.datetime(2026, 1, 1)}
-    if form == "stream":
-        # the stateful dedup promises no order: either copy of /e/24 may win
-        later = ("Prodej domu", "Brno", "Jihomoravsky kraj", 100, "4+1", 3500000, 35000, "/e/24")
-        if later in got:
-            got = got - {later} | {next(e for e in EDGE_EXPECTED if e[7] == "/e/24")}
+    if form == "batch":
+        assert {r["dump_date"] for r in rows} == {datetime.datetime(2026, 1, 1)}
+    else:
+        # the stream stamps each batch with its own time: one per batch
+        assert len({r["dump_date"] for r in rows}) == 1
+    # both forms keep the first copy of /e/24 in file order
     assert got == EDGE_EXPECTED, (sorted(got - EDGE_EXPECTED, key=str),
                                   sorted(EDGE_EXPECTED - got, key=str))
 
